@@ -96,12 +96,6 @@ def test_mixture_plan_realizes_target(documents):
             assert abs(r["rate"] * r["n_docs"] - expect) < 1.0, r
 
 
-def test_cap_per_group_salted_identical(documents):
-    direct = {tuple(r) for r in cap_per_group(documents, n=4).collect()}
-    salted = {tuple(r) for r in cap_per_group(documents, n=4, salt=8).collect()}
-    assert salted == direct
-
-
 def test_pack_sequences_strict_properties(documents):
     from tripsu_spark.operators.curation import pack_sequences_strict
 

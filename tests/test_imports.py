@@ -1,0 +1,53 @@
+"""Import guard for the scripts that run outside this suite: every
+``tripsu_spark`` name that bench.py, bench_extra.py, __spark_entry__.py,
+jobs/, tools/ and perfbench/ import must still exist, so deleting a
+name one of them uses fails here instead of at the next benchmark run.
+The scripts are parsed with ``ast``, never executed; no Spark session."""
+
+import ast
+import importlib
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
+SCRIPTS = sorted(
+    [ROOT / "bench.py", ROOT / "bench_extra.py", ROOT / "__spark_entry__.py"]
+    + [p for d in ("jobs", "tools", "perfbench") for p in (ROOT / d).glob("*.py")]
+)
+
+
+def _tripsu_imports(path: Path):
+    """(module, name) for every ``from tripsu_spark... import name`` in
+    ``path``, at any nesting depth."""
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "tripsu_spark":
+            yield from ((node.module, a.name) for a in node.names)
+
+
+def _resolves(module: str, name: str) -> bool:
+    try:
+        mod = importlib.import_module(module)
+    except ImportError:
+        return False
+    if hasattr(mod, name):
+        return True
+    try:
+        importlib.import_module(f"{module}.{name}")
+    except ImportError:
+        return False
+    return True
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: str(p.relative_to(ROOT)))
+def test_script_tripsu_imports_resolve(path):
+    missing = [
+        f"{module}.{name}" for module, name in _tripsu_imports(path) if not _resolves(module, name)
+    ]
+    assert not missing, f"{path.name} imports names that no longer exist: {missing}"
+
+
+def test_guard_sees_the_scripts():
+    names = {p.name for p in SCRIPTS}
+    assert {"bench.py", "__spark_entry__.py", "run_pipeline.py", "workloads.py"} <= names
+    assert sum(1 for p in SCRIPTS for _ in _tripsu_imports(p)) > 20

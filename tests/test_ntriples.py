@@ -62,22 +62,42 @@ TRICKY = SAMPLE + [
 ]
 
 
-def test_hybrid_parse_identical_to_python_parse(spark):
-    """The Catalyst fast path + Python fallback must produce exactly the
-    rows the uniform Python parser produces — including _error text —
-    on a corpus mixing every form, escapes, and malformed lines."""
+_S, _P = ("iri", "http://a/s"), "http://a/p"
+
+
+def _lit_row(value, datatype=None, lang=None):
+    return (*_S, _P, "literal", value, datatype, lang, None)
+
+
+def _error_row(message):
+    return (None,) * 7 + (message,)
+
+
+# The exact row (7 triple columns + _error) every TRICKY content line
+# parses to; the comment and blank lines yield no row.
+TRICKY_ROWS = [
+    (*_S, _P, "iri", "http://a/o", None, None, None),
+    ("blank", "b0", _P, "blank", "b1", None, None, None),
+    _lit_row("plain"),
+    _lit_row("tagged", lang="en"),
+    _lit_row("42", datatype="http://www.w3.org/2001/XMLSchema#int"),
+    _lit_row('esc "quote" back\\slash\nnl'),
+    _error_row("malformed triple: bad line with \\ escape but no triple"),
+    _error_row('malformed object: "unterminated'),
+    _lit_row(""),
+    _lit_row("", datatype=""),
+    _lit_row("\u00e9\U0001F600"),
+    _lit_row("spaced"),
+    _error_row("malformed triple: <http://a/s> <http://a/p> <http://a/o> no dot"),
+]
+
+
+def test_parse_pins_every_tricky_line(spark):
+    """Every term form, escape and malformed shape parses to exactly
+    the expected row, _error text included."""
     lines = spark.createDataFrame([(line,) for line in TRICKY], ["value"])
-    hybrid = {tuple(r) for r in parse_ntriples_lines(lines, hybrid=True).collect()}
-    python = {tuple(r) for r in parse_ntriples_lines(lines, hybrid=False).collect()}
-    assert hybrid == python
-
-
-def test_catalyst_fast_path_has_no_python_eval(spark):
-    from tripsu_spark.sources.ntriples import parse_ntriples_catalyst
-
-    lines = spark.createDataFrame([(s,) for s in SAMPLE[:3]], ["value"])
-    plan = parse_ntriples_catalyst(lines)._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
+    got = [tuple(r) for r in parse_ntriples_lines(lines).collect()]
+    assert sorted(got, key=repr) == sorted(TRICKY_ROWS, key=repr)
 
 
 def test_roundtrip_write_read(spark, tmp_path):

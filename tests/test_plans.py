@@ -157,3 +157,37 @@ def test_mixture_redistribute_windows_only_after_aggregate(spark):
     win_pos = plan.find("Window")
     assert agg_pos != -1 and win_pos != -1
     assert win_pos < agg_pos  # executed-plan string prints top-down
+
+
+def test_cap_per_group_limits_each_group_before_the_shuffle(spark):
+    """The direct capper window is skew-safe only because
+    InferWindowGroupLimit plants a Partial WindowGroupLimit BELOW the
+    Exchange: every map task ships at most n rows per group, so a
+    dominant group never funnels whole into one reducer."""
+    from tripsu_spark.operators.curation import cap_per_group
+
+    docs = spark.range(0, 4000, numPartitions=4).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("src"), (F.col("id") % 5).cast("string")).alias("source"),
+        (F.col("id") * 37 % 1001).alias("n_chars"),
+    )
+    final = plan_of(cap_per_group(docs, n=5), execute=True).split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    exchange = next(i for i, line in enumerate(lines) if "Exchange" in line)
+    limits = [(i, line) for i, line in enumerate(lines) if "WindowGroupLimit" in line]
+    # executed-plan string prints top-down: below the Exchange = later
+    assert any(i > exchange and line.rstrip().endswith("Partial") for i, line in limits)
+    assert any(i < exchange and line.rstrip().endswith("Final") for i, line in limits)
+
+
+def test_ivf_assign_is_shuffle_free(spark):
+    """IVF assignment is one narrow scan against inlined centroids:
+    no Exchange."""
+    from tripsu_spark.operators.similarity import DIM, ivf_assign
+
+    emb = spark.range(0, 64, numPartitions=2).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") * (k + 1) + 1.0) for k in range(DIM)])
+        .cast("array<float>").alias("embedding"),
+    )
+    assert "Exchange" not in plan_of(ivf_assign(emb), execute=True)

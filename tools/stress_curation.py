@@ -75,10 +75,7 @@ def main() -> None:
     expect = n * (0.5 * 0.35 + 0.5 * 0.8)
     assert abs(kept - expect) / expect < 0.01, (kept, expect)
 
-    direct = t("cap_per_group n=100 direct (count)", lambda: cap_per_group(docs, n=100).count())
-    salted = t("cap_per_group n=100 salt=64 (count)",
-               lambda: cap_per_group(docs, n=100, salt=64).count())
-    assert direct == salted
+    t("cap_per_group n=100 (count)", lambda: cap_per_group(docs, n=100).count())
     t("pack_sequences budget=2048 nb=256 (max pack)",
       lambda: pack_sequences(docs, 2048, 256).agg(F.max("pack_id")).collect()[0][0])
     t("pack_sequences_strict budget=2048 nb=256 (count)",

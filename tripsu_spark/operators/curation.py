@@ -94,41 +94,25 @@ WHERE substring(md5(lang || ':' || CAST(doc_id AS VARCHAR)), 1, {_HEX_DIGITS})
 """
 
 
-def cap_per_group(documents: DataFrame, n: int = 5, salt: int | None = None) -> DataFrame:
+def cap_per_group(documents: DataFrame, n: int = 5) -> DataFrame:
     """Quota capping: keep at most ``n`` docs per source, preferring
     longer docs (n_chars DESC), doc_id as the deterministic tiebreak.
 
-    100 TB: one shuffle on the group key. Skew guidance, MEASURED
-    (tools/stress_capper.py, 50M rows with 99% in one source, 8 cores
-    / 4g heap): on Spark >= 3.5 the ``InferWindowGroupLimit`` rule
-    plants a Partial WindowGroupLimit before the exchange whenever the
-    plan is window + ``rank <= n`` with n below
-    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000),
-    so every map task locally keeps only its top-n per group and the
-    skewed group's reducer receives at most map_tasks*n rows — the
-    optimizer already does the equivalent of salting, and the direct
-    window is skew-safe (measured: direct 14.8s vs salted 11.8s, a
-    noise-band tie). Pass ``salt=S`` only where that rule doesn't
-    fire: engines without it (Spark < 3.5) or caps above the
-    threshold — there the direct shape funnels the dominant group
-    through ONE task's external sort (measured collapse: 110.9s
-    direct vs 31.3s salted with the rule disabled, 3.5x). The salted
-    two-phase: phase 1 ranks within (source, pmod(doc_id, S)) so the
-    skewed group spreads over S tasks and each salted slice keeps its
-    own top ``n``; phase 2 ranks the <= S*n survivors per group
-    exactly. The result is IDENTICAL to the direct window for every
-    input (the global top-n is contained in the union of salted
-    top-n's), so both shapes share one oracle — tests/test_curation.py
-    pins salted == unsalted.
+    100 TB: one shuffle on the group key, and the direct window is
+    skew-safe. On Spark >= 3.5 the ``InferWindowGroupLimit`` rule plants
+    a Partial WindowGroupLimit below the Exchange whenever the plan is
+    window + ``rank <= n`` with n below
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000), so
+    every map task keeps only its local top-n per group and the skewed
+    group's reducer receives at most map_tasks*n rows (plan pinned in
+    tests/test_plans.py). Measured at 50M rows with 99% in one source
+    (BENCH.md, round 4; local[8], 4g heap): 14.8 s direct vs 11.8 s for
+    a salted two-phase window, a noise-band tie. Above the threshold
+    (or with the rule disabled) the rule does not fire and the dominant
+    group funnels through ONE task's external sort: 110.9 s direct vs
+    31.3 s two-phase in the same run.
     """
     order = [F.col("n_chars").desc(), F.col("doc_id")]
-    if salt is not None:
-        w1 = Window.partitionBy(
-            "source", F.pmod(F.col("doc_id"), F.lit(salt))
-        ).orderBy(*order)
-        documents = documents.withColumn(
-            "_prk", F.row_number().over(w1)
-        ).filter(F.col("_prk") <= n)
     w = Window.partitionBy("source").orderBy(*order)
     return (
         documents.withColumn("rk", F.row_number().over(w).cast("bigint"))

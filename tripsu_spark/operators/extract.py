@@ -47,15 +47,6 @@ _MENTION_USER = r"@user(\d+)"
 _MENTION_ITEM = r"#item(\d+)"
 
 
-def _lit(value, datatype=None):
-    return (
-        F.lit(KIND_LITERAL).alias("o_kind"),
-        value.alias("o_value"),
-        (F.lit(datatype) if datatype else F.lit(None)).cast("string").alias("o_datatype"),
-        F.lit(None).cast("string").alias("o_lang"),
-    )
-
-
 def _iri(value):
     return (
         F.lit(KIND_IRI).alias("o_kind"),

@@ -41,10 +41,10 @@ from .pipeline import pseudonymize
 from .table_format import ParquetFormat, TableFormat
 
 
-def predicate_partition_col(fine: bool = False):
+def predicate_partition_col():
     """Partition value for the stored graph table.
 
-    Default: TWO partitions — ``type`` (rdf:type statements) vs ``data``
+    TWO partitions — ``type`` (rdf:type statements) vs ``data``
     (everything else). Partition by what readers actually filter on
     (guide §6): the only selective reader is pass 1
     (``read_for_index``, rdf:type only); pass 2 always reads every
@@ -52,12 +52,8 @@ def predicate_partition_col(fine: bool = False):
     dynamic-partition write task keep ~14 open parquet writers and
     multiplied output files ~7x for pruning nobody used (measured at
     sf0.1: partitioned write +0.89s over flat with 14 values, +0.17s
-    with 2). ``fine=True`` restores per-predicate layout for
-    deployments that query single predicates.
+    with 2).
     """
-    if fine:
-        local = F.element_at(F.split(F.col("predicate"), r"[#/]"), -1)
-        return F.regexp_replace(local, r"[^A-Za-z0-9_\-]", "_")
     from ..operators.extract import RDF_TYPE
 
     return F.when(F.col("predicate") == RDF_TYPE, F.lit(RDF_TYPE_PART)).otherwise(

@@ -15,8 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..crypto import Pseudonymizer, pseudo_triple
-from ..operators.extract import extract_triples
-from ..operators.index import build_type_index
 from ..operators.masking import apply_masks
 from ..rules import Rules
 
@@ -38,33 +36,6 @@ def pseudonymize(
         masked, F.col("mask_subject"), F.col("mask_object"), hasher
     )
     return rewritten.select(*TRIPLE_COLS)
-
-
-def run_two_pass(
-    transcripts: DataFrame,
-    rules: Rules,
-    hasher: Pseudonymizer,
-    extractor=extract_triples,
-    persist: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Full pipeline: returns (type_index, pseudonymized_triples).
-
-    The extracted triple frame feeds pass 1 (index aggregate) AND pass 2
-    (mask joins), so by default it is persisted — otherwise extraction
-    re-runs once per consumer (round-1 verdict item 1). Callers that
-    materialize the graph table themselves (bench.py, the lineage
-    runner) pass ``persist=False`` and reuse their parquet instead.
-    The caller owns the unpersist (Spark evicts LRU if memory is tight;
-    MEMORY_AND_DISK spills rather than recomputes).
-    """
-    triples = extractor(transcripts)
-    if persist:
-        from pyspark import StorageLevel
-
-        triples = triples.persist(StorageLevel.MEMORY_AND_DISK)
-    index_df = build_type_index(triples)
-    out = pseudonymize(triples, index_df, rules, hasher)
-    return index_df, out
 
 
 DEFAULT_RULES_YAML = """

@@ -59,12 +59,10 @@ FAST_WRITE_CONF = {
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
     # Sort-free dynamic-partition writes (guide §6): planned writes
     # insert a per-task sort by the partition column before every
-    # partitionBy() write; with a bounded predicate vocabulary (~14
-    # values) each task instead keeps up to 64 open part writers and
-    # skips the sort entirely (measured: partitioned write 2.96s ->
-    # 2.57s at sf0.1). On a cluster keep maxConcurrentOutputFileWriters
-    # >= distinct partition values per task, or re-enable plannedWrite
-    # for high-cardinality partition columns.
+    # partitionBy() write; the graph table's pred_part column has two
+    # values (plans/lineage.py::predicate_partition_col), so each task
+    # instead keeps at most two open part writers and skips the sort
+    # entirely (measured: partitioned write 2.96s -> 2.57s at sf0.1).
     "spark.sql.optimizer.plannedWrite.enabled": "false",
     "spark.sql.maxConcurrentOutputFileWriters": "64",
 }

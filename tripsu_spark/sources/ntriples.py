@@ -1,18 +1,9 @@
 """N-Triples source + sink (O1 / O9; reference src/io.rs, rdf_types.rs).
 
-Reading has two equivalent parsers (identical rows asserted on mixed
-corpora in tests/test_ntriples.py):
-
-- ``hybrid=False`` (DEFAULT): one Arrow-batched ``mapInPandas`` parser
-  for all lines. Measured FASTER: 1.1-1.3M lines/s at sf0.1-equivalent
-  input on local[32] — compiled ``re`` over an Arrow batch beats Java
-  regex here by ~2.5x even after tuning (see BENCH.md).
-- ``hybrid=True``: escape-free lines parse in pure Catalyst (one
-  packed regexp_replace per line + codegen string ops, 430k lines/s);
-  only lines containing ``\\`` take the Python fallback. Kept for
-  deployments that must avoid Python workers on the ingest path; the
-  tuning history (regex-per-column cloning, filter pushdown inlining)
-  is documented on parse_ntriples_catalyst.
+Reading is one Arrow-batched ``mapInPandas`` parser: two compiled
+``re`` matches per line over each Arrow batch, 1.1-1.3M lines/s at
+sf0.1-equivalent input on local[32] — ~2.5x the best pure-Catalyst
+(Java regex) parser measured (BENCH.md, round 3).
 
 Malformed lines are NOT silently dropped (the reference panics,
 index.rs:107-109): they are routed to an ``_error`` column so callers
@@ -88,10 +79,10 @@ def _parse_line(line: str) -> tuple:
     return (s_kind, s_value, pred, KIND_LITERAL, value, lm.group(3), lm.group(2), None)
 
 
-def parse_ntriples_python(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """Arrow-batched mapInPandas parser: handles the full grammar
-    including escapes. The hybrid fast path below routes only
-    escape-carrying lines here."""
+def parse_ntriples_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
+    """DataFrame of raw lines -> parsed triples (+ _error column).
+    Blank and comment lines are skipped; the full grammar, escapes
+    included, is handled per Arrow batch."""
 
     def parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in PARSED_SCHEMA.fields]
@@ -104,135 +95,6 @@ def parse_ntriples_python(lines: DataFrame, value_col: str = "value") -> DataFra
             yield pd.DataFrame(rows, columns=cols)
 
     return lines.mapInPandas(parse_batches, schema=PARSED_SCHEMA)
-
-
-# Java-regex twin of _LINE_RE for the no-escape fast path. Run ONCE per
-# line via regexp_replace packing the three groups around a U+0001
-# separator (repeated regexp_extract would re-run the full match per
-# group — measured 2x slower than the Python path; packing makes the
-# heavy regex a single pass). U+0001 cannot occur inside a matched
-# term: IRIREF/BLANK_NODE_LABEL exclude control chars, and the pattern
-# groups are delimited by whitespace/dot. A line that merely CONTAINS
-# a raw U+0001 elsewhere and fails the match stays one un-split part.
-_LINE_PAT = r"^\s*(<[^>]*>|_:\S+)\s+<([^>]*)>\s+(.+?)\s*\.\s*$"
-_SEP = "\x01"
-_LANG_PAT = r"^@[A-Za-z][A-Za-z0-9\-]*$"
-
-
-def parse_ntriples_catalyst(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """Pure-Catalyst parser for lines guaranteed to contain no ``\\``:
-    ONE anchored regex per line + codegen string ops (plan asserted in
-    tests/test_ntriples.py). Callers must pre-filter blanks/comments.
-    Semantics identical to the Python parser on escape-free input
-    (equivalence-tested on every term form + malformed shapes)."""
-    v0 = F.col(value_col)
-    packed0 = F.regexp_replace(v0, _LINE_PAT, f"$1{_SEP}$2{_SEP}$3")
-    # Stage the heavy regex in its OWN projection: `_parts` is non-cheap
-    # and referenced many times below, so CollapseProject keeps the
-    # boundary and the regex runs once per row (flattened into one
-    # select, Catalyst clones it into every output column — measured
-    # 4-15x slower). `packed != value` detects match: the anchored
-    # pattern fires at most once and the replacement always differs
-    # (separators replace whitespace).
-    staged = lines.select(
-        v0.alias("_line"),
-        (packed0 != v0).alias("_matched"),
-        F.split(packed0, _SEP, 3).alias("_parts"),
-        F.rand().alias("_nd"),
-    )
-    v = F.col("_line")
-    parts = F.col("_parts")
-    line_ok = F.col("_matched") & (F.size(parts) == 3)
-    # F.get (not []): ANSI mode throws on out-of-bounds for non-matches
-    subj, pred, obj = F.get(parts, 0), F.get(parts, 1), F.get(parts, 2)
-
-    s_is_iri = subj.startswith("<")
-    o_is_iri = obj.startswith("<") & obj.endswith(">")
-    o_is_blank = obj.startswith("_:")
-
-    # Literal decomposition without regex: with no backslash in the
-    # line, a valid literal body contains no '"', so the LAST quote
-    # closes the body and everything after it is the suffix
-    # ('' | @lang | ^^<dt>).
-    lastq = F.length(obj) - F.instr(F.reverse(obj), '"') + 1
-    body = obj.substr(F.lit(2), lastq - 2)
-    suffix = obj.substr(lastq + 1, F.length(obj))
-    dt_inner = suffix.substr(F.lit(4), F.length(suffix) - 4)
-    has_dt = suffix.startswith("^^<") & suffix.endswith(">") & ~dt_inner.contains(">")
-    has_lang = suffix.startswith("@") & F.regexp_like(suffix, F.lit(_LANG_PAT))
-    lit_ok = (
-        obj.startswith('"')
-        & (lastq >= 2)
-        & ~body.contains('"')
-        & ((suffix == "") | has_lang | has_dt)
-    )
-
-    obj_ok = o_is_iri | o_is_blank | lit_ok
-    ok = line_ok & obj_ok
-    null_s = F.lit(None).cast("string")
-
-    mid = lambda c: c.substr(F.lit(2), F.length(c) - 2)  # noqa: E731
-    t = F.struct(
-        F.when(ok, F.when(s_is_iri, F.lit(KIND_IRI)).otherwise(F.lit(KIND_BLANK)))
-        .alias("s_kind"),
-        F.when(ok, F.when(s_is_iri, mid(subj)).otherwise(subj.substr(F.lit(3), F.length(subj))))
-        .alias("s_value"),
-        F.when(ok, pred).alias("predicate"),
-        F.when(
-            ok,
-            F.when(o_is_iri, F.lit(KIND_IRI))
-            .when(o_is_blank, F.lit(KIND_BLANK))
-            .otherwise(F.lit(KIND_LITERAL)),
-        ).alias("o_kind"),
-        F.when(
-            ok,
-            F.when(o_is_iri, mid(obj))
-            .when(o_is_blank, obj.substr(F.lit(3), F.length(obj)))
-            .otherwise(body),
-        ).alias("o_value"),
-        F.when(ok & ~o_is_iri & ~o_is_blank & has_dt, dt_inner)
-        .otherwise(null_s)
-        .alias("o_datatype"),
-        F.when(ok & ~o_is_iri & ~o_is_blank & has_lang, suffix.substr(F.lit(2), F.length(suffix)))
-        .otherwise(null_s)
-        .alias("o_lang"),
-        # The rand() guard is ALWAYS true — it exists to make this
-        # projection non-deterministic, which blocks CollapseProject
-        # and PushPredicateThroughNonJoin. Without it a caller's
-        # `.filter(_error.isNull())` is pushed below `staged` and
-        # substituted term-by-term, inlining the packing regex ~40x
-        # into a Filter operator (which, unlike Project, does no
-        # subexpression elimination) — measured 4x slower. With the
-        # barrier the regex runs exactly once per row, and nothing is
-        # pushable to a text scan anyway.
-        F.when(
-            F.col("_nd") >= 0,
-            F.when(~line_ok, F.concat(F.lit("malformed triple: "), v))
-            .when(~obj_ok, F.concat(F.lit("malformed object: "), obj))
-            .otherwise(null_s),
-        ).alias("_error"),
-    )
-    return staged.select(t.alias("t")).select("t.*")
-
-
-def parse_ntriples_lines(
-    lines: DataFrame, value_col: str = "value", hybrid: bool = False
-) -> DataFrame:
-    """DataFrame of raw lines -> parsed triples (+ _error column).
-
-    Default is the uniform Arrow/Python parser — measured ~2.5x faster
-    than the best Catalyst version (module docstring / BENCH.md).
-    hybrid=True routes escape-free lines through the JVM-only fast path
-    instead, with Python touching only lines containing ``\\``.
-    """
-    if not hybrid:
-        return parse_ntriples_python(lines, value_col)
-    v = F.col(value_col)
-    is_content = v.isNotNull() & (F.trim(v) != "") & ~F.ltrim(v).startswith("#")
-    has_esc = v.contains("\\")
-    fast = parse_ntriples_catalyst(lines.filter(is_content & ~has_esc), value_col)
-    slow = parse_ntriples_python(lines.filter(is_content & has_esc), value_col)
-    return fast.unionByName(slow)
 
 
 def read_ntriples(spark: SparkSession, path: str, strict: bool = True) -> DataFrame:

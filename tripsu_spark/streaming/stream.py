@@ -8,9 +8,9 @@ SAME extraction logic over a live feed of transcript rows:
 
 - per-turn triples are stateless row-local transforms -> they stream
   append-mode unchanged (``per_turn_triples`` is shared with batch);
-- entity-link scores are a windowed streaming aggregate with a
-  watermark on ``ts`` (late turns beyond the watermark are dropped
-  from scoring — the batch path remains the exact authority).
+- entity-link counts are per-conversation running state
+  (``stream_entity_link_state``): a conversation's turns may arrive
+  in many micro-batches and each batch emits the updated counts.
 """
 
 from __future__ import annotations
@@ -36,24 +36,6 @@ def stream_per_turn_triples(transcripts: DataFrame) -> DataFrame:
     return per_turn_triples(transcripts)
 
 
-def stream_entity_link_counts(
-    transcripts: DataFrame, watermark: str = "10 minutes", window: str = "1 hour"
-) -> DataFrame:
-    """Windowed per-(conv, entity) mention counts with late-data bound."""
-    return (
-        transcripts.withWatermark("ts", watermark)
-        .select(
-            F.col("conv_id"),
-            F.col("ts"),
-            F.explode(
-                F.regexp_extract_all(F.col("text"), F.lit(_MENTION_USER), 1)
-            ).alias("entity_id"),
-        )
-        .groupBy(F.window("ts", window), "conv_id", "entity_id")
-        .agg(F.count(F.lit(1)).alias("mention_count"))
-    )
-
-
 LINK_STATE_SCHEMA = "entity_ids array<string>, counts array<bigint>"
 LINK_OUTPUT_SCHEMA = "conv_id string, entity_id string, mention_count bigint"
 
@@ -61,9 +43,8 @@ LINK_OUTPUT_SCHEMA = "conv_id string, entity_id string, mention_count bigint"
 def stream_entity_link_state(transcripts: DataFrame) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``:
     per-conversation RUNNING entity-link counts across micro-batches
-    (unlike the windowed variant above, state lives for the whole
-    conversation: a mention in batch 7 increments the count started in
-    batch 1). Emits the updated (conv_id, entity_id, mention_count)
+    (state lives for the whole conversation: a mention in batch 7
+    increments the count started in batch 1). Emits the updated (conv_id, entity_id, mention_count)
     rows each batch — use outputMode("update")."""
     import re
 
