@@ -11,14 +11,12 @@ Cluster usage:
         --mode   clusters            # or: pairs
         [--num-hashes 128] [--band-size 8] [--min-est 0.5]
 
-``reuse_sigs`` is ON by default here: at production params the
-signature computation (~num_hashes x shingles md5 per doc) dominates
-and the plan otherwise recomputes it 4x across the band self-join and
-verify joins — a measured 4.05x wall-clock win at 100k docs (BENCH.md
-stress section). Output is bit-identical either way (pinned by
-tests/test_dedup.py); pass --no-reuse-sigs only to A/B the plans.
-The oracle-gate calls in __spark_entry__.py stay pure-Catalyst
-(reuse off) so their plan assertions keep holding.
+``reuse_sigs`` is ON by default: the plan otherwise recomputes the
+signatures for each branch of the band self-join and the verify join,
+measured +29% on the benchmark's clustering span (BENCH.md). Output is
+identical either way (pinned by tests/test_dedup.py); pass
+--no-reuse-sigs for a plan without the executor-local checkpoint
+(see ``dedup.dedup_minhash_lsh`` for its executor-loss caveat).
 
 Local smoke:
 
@@ -54,8 +52,8 @@ def main() -> int:
     ap.add_argument("--min-est", type=float, default=0.5)
     ap.add_argument(
         "--no-reuse-sigs", dest="reuse_sigs", action="store_false",
-        help="recompute signatures per join branch (A/B only; 4x slower "
-             "at production params, identical output)",
+        help="recompute signatures per join branch (slower, identical "
+             "output, no executor-local checkpoint)",
     )
     args = ap.parse_args()
 

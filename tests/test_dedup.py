@@ -148,14 +148,13 @@ def test_dedup_clusters_connected_components(spark, docs):
 
 
 def test_minhash_lsh_reuse_sigs_identical(spark, docs):
-    """reuse_sigs=True (one localCheckpointed signature computation
-    instead of 4x across join branches — measured 4.05x at 100k docs,
-    BENCH.md) must be result-identical to the pure-Catalyst default."""
-    from tripsu_spark.operators import dedup
-
+    """reuse_sigs=True (the default: one localCheckpointed signature
+    computation instead of one per join branch) must be result-identical
+    to reuse_sigs=False, the single plan without a materialized
+    intermediate."""
     base = {
         tuple(r)
-        for r in dedup.dedup_minhash_lsh(docs, 128, 8).collect()
+        for r in dedup.dedup_minhash_lsh(docs, 128, 8, reuse_sigs=False).collect()
     }
     reused = {
         tuple(r)
@@ -164,44 +163,83 @@ def test_minhash_lsh_reuse_sigs_identical(spark, docs):
     assert base == reused and base
 
 
-def test_connected_components_deep_chain_converges_fast(spark):
-    """A 1000-link chain (diameter 1000) must close within the default
-    25 rounds — possible only because the label-propagation core does
-    pointer doubling (O(log diameter)); plain HashMin would need 1000
-    rounds and now RAISES instead of silently returning wrong labels."""
-    from pyspark.sql import functions as F
+def _labels(df):
+    return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
 
+
+def _chain(spark, n):
+    nodes = spark.range(n).select(F.col("id").alias("doc_id"))
+    return nodes, spark.range(n - 1).select(F.col("id").alias("a"), (F.col("id") + 1).alias("b"))
+
+
+def test_connected_components_deep_chain_converges_fast(spark, monkeypatch):
+    """A 1000-link chain (diameter 1000) must close within the default
+    25 rounds on the distributed path — possible only because the
+    label-propagation core does pointer doubling (O(log diameter));
+    plain HashMin would need 1000 rounds and now RAISES instead of
+    silently returning wrong labels."""
     from tripsu_spark.operators.dedup import connected_components
 
+    monkeypatch.setattr(dedup, "CC_DRIVER_EDGES", 0)
     n = 1001
-    nodes = spark.range(n).select(F.col("id").alias("doc_id"))
-    chain = spark.range(n - 1).select(
-        F.col("id").alias("a"), (F.col("id") + 1).alias("b")
-    )
-    got = connected_components(nodes, chain, max_iters=25)
+    got = connected_components(*_chain(spark, n), max_iters=25)
     labels = {r["cluster_id"] for r in got.collect()}
     assert labels == {0}
     assert got.count() == n
 
 
-def test_connected_components_raises_on_non_convergence(spark):
-    import pytest
-    from pyspark.sql import functions as F
-
+def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     from tripsu_spark.operators.dedup import connected_components
 
-    n = 40
-    nodes = spark.range(n).select(F.col("id").alias("doc_id"))
-    chain = spark.range(n - 1).select(
-        F.col("id").alias("a"), (F.col("id") + 1).alias("b")
-    )
+    monkeypatch.setattr(dedup, "CC_DRIVER_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, chain, max_iters=2)
+        connected_components(*_chain(spark, 40), max_iters=2)
+
+
+def test_driver_components_equal_hash_min(spark, monkeypatch):
+    """The driver union-find and the distributed HashMin (forced with
+    CC_DRIVER_EDGES = 0) label seeded random graphs and the 1000-link
+    chain identically. The random graphs have isolated nodes, repeated
+    and reversed edges, and ids listed out of order."""
+    import random
+
+    graphs = [_chain(spark, 1001)]
+    for seed in range(3):
+        rng = random.Random(seed)
+        n = rng.randint(20, 80)
+        ids = rng.sample(range(1000), n)
+        edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(rng.randint(n // 2, n))]
+        graphs.append((
+            spark.createDataFrame([(i,) for i in ids], "doc_id long"),
+            spark.createDataFrame(edges, "a long, b long"),
+        ))
+    for nodes, pairs in graphs:
+        driver = _labels(dedup.connected_components(nodes, pairs))
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "CC_DRIVER_EDGES", 0)
+            hash_min = _labels(dedup.connected_components(nodes, pairs))
+        assert driver == hash_min
+        assert len(set(driver.values())) < len(driver)  # some nodes merged
+
+
+def test_dedup_clusters_singletons(spark):
+    """Every doc is its own cluster when nothing can pair: an empty
+    documents table, docs all shorter than a shingle, and docs with no
+    verified pair."""
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+    assert dedup.dedup_clusters(spark.createDataFrame([], schema)).collect() == []
+    short = spark.createDataFrame(
+        [(i, t, "en", "s", 0) for i, t in enumerate(["tiny", "two words", "", None])], schema
+    )
+    assert _labels(dedup.dedup_clusters(short)) == {0: 0, 1: 1, 2: 2, 3: 3}
+    apart = spark.createDataFrame([DOCS[0], DOCS[3]], COLS)
+    assert dedup.dedup_minhash_lsh(apart).count() == 0
+    assert _labels(dedup.dedup_clusters(apart, 128, 8)) == {0: 0, 3: 3}
 
 
 def test_dedup_job_cli_smoke(spark, tmp_path):
     """Batch surface (jobs/dedup_job.py): reuse_sigs defaults ON and the
-    written clusters match the in-process pure-Catalyst operator."""
+    written clusters match the in-process operator."""
     import json
     import subprocess
     import sys

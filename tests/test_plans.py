@@ -113,16 +113,40 @@ def test_embedding_neardup_lsh_is_equi_join(spark):
 
 
 def test_minhash_signature_stage_is_shuffle_free(spark):
-    """Signatures (even at 128 hashes) are per-row expressions over one
-    scan — any Exchange here would shuffle document text."""
+    """Signatures are per-row work over one scan (any Exchange here
+    would shuffle document text), and the kernel's plan does not grow
+    with the number of hashes."""
+    import re
+
     from tripsu_spark.operators import dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sigs = docs.select(
-        "doc_id", dedup.minhash_signature(F.col("text"), dedup.NUM_HASHES_PROD).alias("sig")
-    )
-    plan = plan_of(sigs)
+    plan = plan_of(dedup.minhash_sig_frame(docs, dedup.NUM_HASHES_PROD))
     assert "Exchange" not in plan
+
+    def optimized(num_hashes):
+        qe = dedup.minhash_sig_frame(docs, num_hashes)._jdf.queryExecution()
+        # expression ids and lambda variable names are per-query counters
+        return re.sub(r"#\d+|x_\d+", "", qe.optimizedPlan().toString())
+
+    assert optimized(dedup.NUM_HASHES) == optimized(dedup.NUM_HASHES_PROD)
+
+
+def test_shingle_stage_splits_text_once(spark):
+    """The shingle stage tokenizes each text once: one split per scan
+    of the documents, in MinHash signatures and in the exact n-gram
+    Jaccard join (whose shingles feed four scans)."""
+    from tripsu_spark.operators import dedup
+
+    docs = spark.range(4).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("w x y z "), F.col("id").cast("string")).alias("text"),
+    )
+    for df, scans in ((dedup.minhash_sig_frame(docs, dedup.NUM_HASHES_PROD), 1),
+                      (dedup.dedup_ngram_jaccard(docs), 4)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("Range (") == scans
+        assert plan.count("split(") == scans
 
 
 def test_new_text_ops_are_shuffle_free_codegen(spark):

@@ -88,16 +88,16 @@ def main() -> int:
         drows = _pandas_rows(ddf)
         ok_cols = sorted(scols) == sorted(dcols)
         ok_rows = len(srows) == len(drows)
-        ok_dtype, dtype_msg = _check_dtypes(sdf, ddf)
         sh = table_hash([tuple(r) for r in srows], scols)
         dh = table_hash(drows, dcols)
         ok_hash = sh == dh
+        spark_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
+        ok_dtype, dtype_note = dtype_check(spark_types, ddf, ok_hash)
         status = "OK" if (ok_cols and ok_rows and ok_hash and ok_dtype) else "FAIL"
         print(
             f"{name:24s} {status}  spark={len(srows)} duck={len(drows)} "
             f"cols={'=' if ok_cols else f'{scols} vs {dcols}'} "
-            f"hash={'=' if ok_hash else 'MISMATCH'}"
-            + ("" if ok_dtype else f" dtype={dtype_msg}")
+            f"hash={'=' if ok_hash else 'MISMATCH'}{dtype_note}"
         )
         if status == "FAIL":
             failures += 1
@@ -125,23 +125,26 @@ def _pandas_rows(ddf) -> list[tuple]:
     return rows
 
 
-def _check_dtypes(sdf, ddf) -> tuple[bool, str]:
-    """Oracle pandas dtypes must be type-compatible with the Spark
-    schema: an integral Spark column materializing as floating on the
-    oracle side (HUGEINT/uncast SUM -> float64) is exactly the
-    divergence class that goes driver-red; name it explicitly."""
+def dtype_check(spark_types: dict[str, str], ddf, ok_hash: bool) -> tuple[bool, str]:
+    """(ok, note): oracle pandas dtypes must be type-compatible with the
+    Spark schema. An integral Spark column materializing as floating on
+    the oracle side (HUGEINT/uncast SUM -> float64) is exactly the
+    divergence class that goes driver-red, so it is named. pandas also
+    uses float64 for a nullable int column, so a float column holding
+    NaN proves nothing by itself: it fails nothing, but is still named
+    as a possible cause when the hash mismatches."""
     import pandas.api.types as pt
 
-    spark_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    bad = []
+    bad, possible = [], []
     for col in ddf.columns:
         st = spark_types.get(col)
         if st in ("tinyint", "smallint", "int", "bigint") and pt.is_float_dtype(ddf[col]):
-            # pandas uses float64 for a nullable int column; only a
-            # NaN-free float column proves an oracle typing bug
-            if not ddf[col].isna().any():
-                bad.append(f"{col}: spark {st} vs oracle {ddf[col].dtype}")
-    return (not bad, "; ".join(bad))
+            msg = f"{col}: spark {st} vs oracle {ddf[col].dtype}"
+            (possible if ddf[col].isna().any() else bad).append(msg)
+    note = f" dtype={'; '.join(bad)}" if bad else ""
+    if possible and not ok_hash:
+        note += f" possible dtype divergence: {'; '.join(possible)}"
+    return not bad, note
 
 
 def _diff(srows, scols, drows, dcols, limit=5):

@@ -152,7 +152,7 @@ def main() -> None:
     if not args.skip_noreuse:
         t0 = time.monotonic()
         n_pairs_base = dedup.dedup_minhash_lsh(
-            docs, dedup.NUM_HASHES_PROD, dedup.BAND_SIZE_PROD, 0.5
+            docs, dedup.NUM_HASHES_PROD, dedup.BAND_SIZE_PROD, 0.5, reuse_sigs=False
         ).count()
         out["minhash_lsh_128_noreuse_sec"] = round(time.monotonic() - t0, 2)
         out["minhash_lsh_128_noreuse_pairs"] = n_pairs_base

@@ -9,8 +9,9 @@ implementation to keep them in lock-step.
 
 Scale notes (100 TB): exact dedup is a single hash-aggregate
 (map-side partial combine, shuffle on the 32-byte digest, never the
-text). MinHash signatures are computed per-row with NO shuffle
-(array_min over transform — whole-stage codegen); the LSH band join
+text). MinHash signatures are computed per-row with NO shuffle: the
+shingle projection (interpreted higher-order functions, not codegen)
+feeds one Arrow-batched numpy MD5 kernel; the LSH band join
 shuffles only (band_idx, band_hash, doc_id) tuples, and candidate
 verification touches signatures, not documents. The O(n^2) exact
 n-gram Jaccard join exists as the small-scale oracle baseline; its
@@ -19,8 +20,15 @@ scale path IS the LSH variant.
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+from ..functions.md5_np import minhash_batches
 
 # ------------------------------------------------------------ params
 
@@ -44,9 +52,11 @@ def _tokens(text: Column) -> Column:
     return F.split(F.lower(text), r"\s+")
 
 
-def _shingles(text: Column) -> Column:
-    """Word SHINGLE_K-grams as strings; [] when too short."""
-    toks = _tokens(text)
+def _shingles(toks: Column) -> Column:
+    """Word SHINGLE_K-grams of the token array ``toks``; [] when too
+    short. Higher-order functions are interpreted, so an inline token
+    expression here would re-split the text for every reference inside
+    the lambda: pass a column staged by ``_shingle_frame``."""
     n = F.size(toks)
     make = F.transform(
         F.sequence(F.lit(1), n - (SHINGLE_K - 1)),
@@ -55,6 +65,19 @@ def _shingles(text: Column) -> Column:
         ),
     )
     return F.when(n >= SHINGLE_K, make).otherwise(F.array().cast("array<string>"))
+
+
+def _shingle_frame(documents: DataFrame) -> DataFrame:
+    """(doc_id, sh): the text is split ONCE into a staged ``toks``
+    column. CollapseProject keeps that projection separate because split
+    is not cheap and the shingle projection references it more than
+    once. There is no Filter on ``size(toks)``: Catalyst pushes one
+    below the token projection, which would split every text twice.
+    Too-short docs get [] instead, which the consumers drop."""
+    return (
+        documents.select(F.col("doc_id"), _tokens(F.col("text")).alias("toks"))
+        .select("doc_id", _shingles(F.col("toks")).alias("sh"))
+    )
 
 
 def _sql_shingles(text_expr: str) -> str:
@@ -90,8 +113,11 @@ def dedup_exact_oracle() -> str:
 def minhash_signature(text: Column, num_hashes: int = NUM_HASHES) -> Column:
     """array<string> of ``num_hashes`` minhashes: min over shingles of
     md5('<j>:' || shingle). Lexicographic min over hex == a valid
-    min-wise hash family; portable across engines."""
-    sh = _shingles(text)
+    min-wise hash family; portable across engines.
+
+    The Catalyst reference that tests/test_md5_np.py checks the
+    ``minhash_sig_frame`` kernel against; no operator uses it."""
+    sh = _shingles(_tokens(text))
 
     def minhash_j(j: int):
         # NB: a `lambda s, j=j:` two-parameter lambda would make
@@ -104,24 +130,19 @@ def minhash_signature(text: Column, num_hashes: int = NUM_HASHES) -> Column:
 
 
 def minhash_sig_frame(documents: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """(doc_id, sig: array<string>) for every shingle-able doc.
+    """(doc_id, sig: array<string>) for every doc with at least one
+    shingle.
 
-    Built in STAGED projections (shingles column -> sig column) rather
-    than one nested expression: inlining the num_hashes-wide signature
-    into every downstream reference multiplies the expression tree
-    (16 bands × 128 refs × shingle subtree at production params) and
-    OOMs codegen. Catalyst's CollapseProject keeps multi-referenced
-    non-cheap projections as real stages, so each tree stays linear."""
-    shingled = documents.select(
-        F.col("doc_id"), _shingles(F.col("text")).alias("sh")
-    ).filter(F.size("sh") > 0)
-
-    def mh(j: int):
-        seed = F.lit(f"{j}:")
-        return F.array_min(F.transform(F.col("sh"), lambda s: F.md5(F.concat(seed, s))))
-
-    return shingled.select(
-        "doc_id", F.array(*[mh(j) for j in range(num_hashes)]).alias("sig")
+    Shingles stay a JVM projection, so Java-regex split and lower keep
+    the oracle's semantics. The signatures are one Arrow-batched
+    ``mapInArrow`` over the numpy MD5 kernel (functions/md5_np.py),
+    which also drops docs without shingles; the plan is the same size
+    at any ``num_hashes``."""
+    schema = StructType([
+        documents.schema["doc_id"], StructField("sig", ArrayType(StringType()))
+    ])
+    return _shingle_frame(documents).mapInArrow(
+        partial(minhash_batches, num_hashes=num_hashes), schema
     )
 
 
@@ -202,17 +223,22 @@ def dedup_minhash_lsh(documents: DataFrame, num_hashes: int = NUM_HASHES,
     on signature agreement >= ``min_est``. Output (a, b, est) with
     a < b, est rounded to avoid cross-engine float noise.
 
-    ``reuse_sigs=True`` (default since the optimization round) lazily
-    ``localCheckpoint``s the signature frame so the ~num_hashes×shingles
-    md5 work per doc runs ONCE instead of 4× (the plan references sigs
-    in the band self-join twice and the verify join twice, and Catalyst
-    does not CSE across join branches). At production params (128
-    hashes) signatures dominate: measured 4.05× on the batch surface and
-    ~4× on the declared query (see OPTIMIZATION_r06.md). Output is
-    pinned identical either way (tests/test_dedup.py
+    ``reuse_sigs=True`` (the default) lazily ``localCheckpoint``s the
+    signature frame, so signatures are computed once instead of once
+    per reference (the band self-join and the verify join each read
+    sigs twice, and Catalyst does not share work across join branches).
+    Recomputing per branch measured +29% on the benchmark's
+    ``dedup_clusters`` span with the numpy kernel. ``persist`` measured
+    a tie, but a lazy operator has no point at which to unpersist, so
+    the signatures would stay in the cache manager; checkpointed blocks
+    are cleaned up with their RDD (BENCH.md, signature reuse A/B).
+
+    The checkpoint's costs: its blocks live only in executor storage,
+    so losing an executor fails the job instead of recomputing the
+    lost signatures, and a streaming DataFrame cannot be checkpointed.
+    Output is identical either way (tests/test_dedup.py
     test_minhash_lsh_reuse_sigs_identical); pass ``reuse_sigs=False``
-    for a pure-Catalyst single plan (streaming-safe, no materialized
-    intermediate)."""
+    for a single plan without a materialized intermediate."""
     sigs = minhash_sig_frame(documents, num_hashes)
     if reuse_sigs:
         sigs = sigs.localCheckpoint(eager=False)
@@ -267,8 +293,8 @@ def dedup_ngram_jaccard(documents: DataFrame) -> DataFrame:
     O(n^2)-ish verification baseline: explode distinct shingles,
     self-join on shingle, count intersections. The LSH operator above
     is the scale path; this is the ground truth it approximates."""
-    sh = documents.select(
-        F.col("doc_id"), F.explode(F.array_distinct(_shingles(F.col("text")))).alias("s")
+    sh = _shingle_frame(documents).select(
+        "doc_id", F.explode(F.array_distinct(F.col("sh"))).alias("s")
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
@@ -410,11 +436,70 @@ SELECT doc_id, {bits_expr} AS simhash FROM summed
 
 # -------------------------------------- near-dup clusters (canonical doc)
 
+# Verified edges up to which ``connected_components`` solves on the
+# driver: 500k (a, b) pairs are 8 MB of Arrow longs, at most 1M labelled
+# ids to broadcast, and 1.2-1.9 s of union-find on one core (random
+# edges over 300k-1M ids).
+CC_DRIVER_EDGES = 500_000
+
+
 def connected_components(nodes: DataFrame, pairs: DataFrame,
                          max_iters: int = 25) -> DataFrame:
     """(doc_id, cluster_id): cluster_id = min doc_id reachable from
-    doc_id over the undirected edge set ``pairs`` (a, b). Singletons
-    are their own cluster.
+    doc_id over the undirected edge set ``pairs`` (a, b), whose
+    endpoints are node ids. Singletons are their own cluster.
+
+    One bounded action takes up to ``CC_DRIVER_EDGES + 1`` edges. If the
+    graph fits, an exact union-find on the driver labels the edge
+    endpoints and a broadcast join puts the labels on the nodes: one
+    job instead of several per round. A larger graph runs
+    ``_hash_min``, which raises RuntimeError if the fixpoint is not
+    reached in ``max_iters`` rounds."""
+    edges = pairs.select("a", "b").limit(CC_DRIVER_EDGES + 1).toArrow()
+    if edges.num_rows > CC_DRIVER_EDGES:
+        return _hash_min(nodes, pairs, max_iters)
+    if edges.num_rows == 0:
+        return nodes.select("doc_id", F.col("doc_id").alias("cluster_id"))
+    ids, labels = _min_labels(
+        edges.column("a").to_numpy(zero_copy_only=False),
+        edges.column("b").to_numpy(zero_copy_only=False),
+    )
+    id_type = nodes.schema["doc_id"].dataType
+    labelled = nodes.sparkSession.createDataFrame(
+        pa.table({"doc_id": ids, "_label": labels}),
+        StructType([StructField("doc_id", id_type), StructField("_label", id_type)]),
+    )
+    return (
+        nodes.select("doc_id")
+        .join(F.broadcast(labelled), "doc_id", "left")
+        .select("doc_id", F.coalesce("_label", "doc_id").alias("cluster_id"))
+    )
+
+
+def _min_labels(a, b):
+    """(ids, labels): every edge endpoint, ascending, and the min id of
+    its component. Union-find over compacted ids that always hangs the
+    larger root under the smaller, so each root is its component's
+    minimum."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    parent = list(range(len(ids)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for x, y in zip(inv[:len(a)].tolist(), inv[len(a):].tolist()):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    return ids, ids[[find(x) for x in range(len(ids))]]
+
+
+def _hash_min(nodes: DataFrame, pairs: DataFrame, max_iters: int) -> DataFrame:
+    """Distributed ``connected_components`` for edge sets too large for
+    the driver.
 
     Algorithm: HashMin label propagation with pointer doubling — each
     round does (1) ``label[v] <- min(label[v], min over neighbors of
