@@ -59,7 +59,7 @@ from tripsu_spark.crypto import Pseudonymizer
 from tripsu_spark.operators.index import build_type_index
 from tripsu_spark.plans.pipeline import pseudonymize
 from tripsu_spark.rules import Rules
-from tripsu_spark.session import get_spark
+from tripsu_spark.session import get_submit_spark
 from tripsu_spark.sources.ntriples import parse_ntriples_lines, write_ntriples
 
 
@@ -87,7 +87,7 @@ def _emit_output(out_dir: str, stdout_mode: bool) -> None:
 
 
 def cmd_index(args) -> int:
-    spark = get_spark(app_name="tripsu-index")
+    spark = get_submit_spark("tripsu-index")
     spark.sparkContext.setLogLevel("ERROR")
     lines, spool = _read_input(spark, args.input)
     parsed = parse_ntriples_lines(lines)
@@ -116,7 +116,7 @@ def cmd_index(args) -> int:
 
 
 def cmd_pseudo(args) -> int:
-    spark = get_spark(app_name="tripsu-pseudo")
+    spark = get_submit_spark("tripsu-pseudo")
     spark.sparkContext.setLogLevel("ERROR")
     rules = Rules.load(args.rules)
     secret = Path(args.secret).read_bytes() if args.secret else None

@@ -51,3 +51,26 @@ def test_guard_sees_the_scripts():
     names = {p.name for p in SCRIPTS}
     assert {"bench.py", "__spark_entry__.py", "run_pipeline.py", "workloads.py"} <= names
     assert sum(1 for p in SCRIPTS for _ in _tripsu_imports(p)) > 20
+
+
+def _names(path: Path) -> list[str]:
+    """Every name ``path`` imports, references or calls an attribute of."""
+    out = []
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        if isinstance(node, ast.ImportFrom):
+            out += [a.name for a in node.names]
+        elif isinstance(node, ast.Name):
+            out.append(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.append(node.attr)
+    return out
+
+
+@pytest.mark.parametrize(
+    "path", sorted((ROOT / "jobs").glob("*.py")), ids=lambda p: str(p.relative_to(ROOT))
+)
+def test_job_session_leaves_master_to_the_launcher(path):
+    """Jobs run under spark-submit, which owns ``--master``:
+    ``get_spark`` pins ``local[N]`` and would override it."""
+    names = _names(path)
+    assert "get_submit_spark" in names and "get_spark" not in names

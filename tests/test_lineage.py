@@ -6,6 +6,7 @@ import os
 import pytest
 
 from tripsu_spark.crypto import Pseudonymizer
+from tripsu_spark.plans import lineage
 from tripsu_spark.plans.lineage import GraphTableWriter, read_for_index
 from tripsu_spark.plans.oracle import BENCH_SECRET
 from tripsu_spark.plans.pipeline import default_rules
@@ -17,6 +18,38 @@ def setup(spark, tmp_path):
     transcripts = synthetic_transcripts(spark, n_convs=24, turns_per_conv=4)
     hasher = Pseudonymizer.create("sha256", BENCH_SECRET)
     return transcripts, default_rules(), hasher, str(tmp_path / "graph")
+
+
+@pytest.fixture()
+def crash_after(monkeypatch):
+    """``crash_after(k)``: the next run raises right after bucket k's
+    manifest is written, as a job killed between two commits would;
+    later runs are not affected."""
+
+    def arm(bucket):
+        write = lineage._atomic_write_json
+
+        def crash(path, obj):
+            write(path, obj)
+            if os.path.basename(path) == f"bucket-{bucket}.json":
+                monkeypatch.setattr(lineage, "_atomic_write_json", write)
+                raise RuntimeError(f"injected failure after bucket {bucket}")
+
+        monkeypatch.setattr(lineage, "_atomic_write_json", crash)
+
+    return arm
+
+
+def _dirty(spark, transcripts):
+    bad = spark.createDataFrame(
+        [
+            (None, 0, "user", "null conv", None, None),
+            ("conv-1", 1, None, "null role", None, None),
+            ("conv-2", 2, "user", None, None, None),
+        ],
+        schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    return transcripts.unionByName(bad)
 
 
 def test_full_run_writes_manifests_and_metrics(spark, setup):
@@ -34,11 +67,12 @@ def test_full_run_writes_manifests_and_metrics(spark, setup):
         assert m["row_count"] > 0 and "checksum" in m
 
 
-def test_kill_and_resume_skips_committed_buckets(spark, setup):
+def test_kill_and_resume_skips_committed_buckets(spark, setup, crash_after):
     transcripts, rules, hasher, path = setup
     writer = GraphTableWriter(path, n_buckets=4)
+    crash_after(1)
     with pytest.raises(RuntimeError, match="injected failure"):
-        writer.run(spark, transcripts, rules, hasher, fail_after_bucket=1)
+        writer.run(spark, transcripts, rules, hasher)
     done_before = writer.committed_buckets()
     assert done_before == {0, 1}
 
@@ -83,15 +117,7 @@ def test_quarantine_counts_in_manifests(spark, setup):
     metrics.json, and excluded from the committed graph (SURVEY §4:
     never silently dropped)."""
     transcripts, rules, hasher, path = setup
-    bad = spark.createDataFrame(
-        [
-            (None, 0, "user", "null conv", None, None),
-            ("conv-1", 1, None, "null role", None, None),
-            ("conv-2", 2, "user", None, None, None),
-        ],
-        schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    dirty = transcripts.unionByName(bad)
+    dirty = _dirty(spark, transcripts)
     writer = GraphTableWriter(path, n_buckets=3)
     metrics = writer.run(spark, dirty, rules, hasher)
     assert metrics["total_quarantined"] == 3
@@ -103,6 +129,10 @@ def test_quarantine_counts_in_manifests(spark, setup):
     # the quarantined rows are preserved on disk for audit
     q = spark.read.json(os.path.join(path, "_quarantine"))
     assert q.count() == 3
+    # ... by ONE write for all buckets: one commit marker, at the top
+    q_dir = os.path.join(path, "_quarantine")
+    markers = [r for r, _, files in os.walk(q_dir) if "_SUCCESS" in files]
+    assert markers == [q_dir]
     # and the committed graph matches a clean run over valid rows only
     clean = GraphTableWriter(path + "-clean", n_buckets=3)
     m_clean = clean.run(spark, transcripts, rules, hasher)
@@ -114,6 +144,36 @@ def test_quarantine_counts_in_manifests(spark, setup):
     # resume metrics carry quarantine counts forward from manifests
     m_again = writer.run(spark, dirty, rules, hasher)
     assert m_again["total_quarantined"] == 3
+
+
+def test_quarantine_survives_crash_and_resume(spark, setup, crash_after):
+    """Dirty input, a crash after bucket 0, then a resume: every bucket
+    manifest and the total carry the same quarantine counts as a
+    one-shot run, and the resume leaves _quarantine untouched."""
+    transcripts, rules, hasher, path = setup
+    dirty = _dirty(spark, transcripts)
+    q_dir = os.path.join(path, "_quarantine")
+
+    def q_files():
+        return {
+            os.path.join(r, f): os.stat(os.path.join(r, f)).st_mtime_ns
+            for r, _, files in os.walk(q_dir) for f in files
+        }
+
+    writer = GraphTableWriter(path, n_buckets=3)
+    crash_after(0)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        writer.run(spark, dirty, rules, hasher)
+    before = q_files()
+    assert before
+    resumed = writer.run(spark, dirty, rules, hasher)
+    assert q_files() == before
+
+    one_shot = GraphTableWriter(path + "-once", n_buckets=3).run(spark, dirty, rules, hasher)
+    assert resumed["total_quarantined"] == one_shot["total_quarantined"] == 3
+    for b in ["0", "1", "2", "derived"]:
+        with open(os.path.join(path, "_manifests", f"bucket-{b}.json")) as fh:
+            assert json.load(fh)["quarantined"] == one_shot["buckets"][b]["quarantined"]
 
 
 def test_snapshot_time_travel_and_schema_evolution(spark, setup):
@@ -194,16 +254,14 @@ def test_snapshot_level2_dictionary_storage(spark, setup):
     assert raw.filter(F.col("p_code") == 0).count() == 0
 
 
-def test_resume_refuses_storage_level_mismatch(spark, setup):
+def test_resume_refuses_storage_level_mismatch(spark, setup, crash_after):
     """An interrupted run resumed with a different --store-compact must
     refuse instead of writing mixed physical schemas into one version."""
     transcripts, rules, hasher, path = setup
     writer = GraphTableWriter(path + "-mix", n_buckets=3)
+    crash_after(0)
     with pytest.raises(RuntimeError):
-        writer.run(
-            spark, transcripts, rules, hasher,
-            store_compact=2, fail_after_bucket=0,
-        )
+        writer.run(spark, transcripts, rules, hasher, store_compact=2)
     with pytest.raises(ValueError, match="storage-level mismatch"):
         writer.run(spark, transcripts, rules, hasher)  # default level 0
     # resuming at the committed level completes cleanly
@@ -211,18 +269,16 @@ def test_resume_refuses_storage_level_mismatch(spark, setup):
     assert metrics["skipped"] == [0]
 
 
-def test_resume_legacy_manifest_infers_level_from_schema(spark, setup):
+def test_resume_legacy_manifest_infers_level_from_schema(spark, setup, crash_after):
     """Manifests committed before storage_level existed lack the key;
     resume must infer the true level from the committed bucket's
     parquet schema, not assume 0 (which would refuse the correct
     resume and steer toward mixed-schema corruption)."""
     transcripts, rules, hasher, path = setup
     writer = GraphTableWriter(path + "-legacy", n_buckets=3)
+    crash_after(0)
     with pytest.raises(RuntimeError):
-        writer.run(
-            spark, transcripts, rules, hasher,
-            store_compact=2, fail_after_bucket=0,
-        )
+        writer.run(spark, transcripts, rules, hasher, store_compact=2)
     # simulate a legacy manifest: drop the storage_level key
     mpath = os.path.join(path + "-legacy", "_manifests", "bucket-0.json")
     with open(mpath) as fh:
@@ -339,7 +395,7 @@ class MockCatalogFormat:
         return out
 
 
-def test_mock_catalog_full_lifecycle(spark, setup):
+def test_mock_catalog_full_lifecycle(spark, setup, crash_after):
     """GraphTableWriter's whole lifecycle through catalog semantics:
     write -> read -> kill/resume (committed tables NOT rewritten) ->
     overwrite to a new version -> time-travel back — the contract
@@ -349,8 +405,9 @@ def test_mock_catalog_full_lifecycle(spark, setup):
 
     # -- write with an injected crash after bucket 0
     writer = GraphTableWriter(path + "-cat", n_buckets=3, table_format=catalog)
+    crash_after(0)
     with pytest.raises(RuntimeError, match="injected failure"):
-        writer.run(spark, transcripts, rules, hasher, fail_after_bucket=0)
+        writer.run(spark, transcripts, rules, hasher)
     committed_idents = list(catalog.write_log)
     # mid-run read: manifest-vouched bucket tables only, via read_union
     assert writer.read(spark).count() > 0
@@ -397,15 +454,16 @@ def test_mock_catalog_full_lifecycle(spark, setup):
         catalog.read_union(spark, [], path + "-cat")
 
 
-def test_midrun_read_returns_committed_buckets_only(spark, setup):
+def test_midrun_read_returns_committed_buckets_only(spark, setup, crash_after):
     """With no snapshot yet (mid-run after a crash), read() must return
     exactly the manifest-vouched buckets via the format seam — not
     whatever partial files are on disk, and not raise for formats that
     have no '<base>/data' umbrella table."""
     transcripts, rules, hasher, path = setup
     writer = GraphTableWriter(path + "-midrun", n_buckets=3)
+    crash_after(1)
     with pytest.raises(RuntimeError, match="injected failure"):
-        writer.run(spark, transcripts, rules, hasher, fail_after_bucket=1)
+        writer.run(spark, transcripts, rules, hasher)
     assert writer.snapshots() == []
     got = writer.read(spark).count()
     with open(os.path.join(path + "-midrun", "_manifests", "bucket-0.json")) as fh:

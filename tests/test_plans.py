@@ -83,6 +83,40 @@ def test_per_turn_extraction_is_shuffle_free(spark):
     assert "Generate" in plan  # the single explode
 
 
+def _ancestors(lines: list[str], i: int) -> list[str]:
+    """Node names above line ``i`` of a plan tree string."""
+    depth = lambda ln: len(ln) - len(ln.lstrip(" :+-"))  # noqa: E731
+    out, d = [], depth(lines[i])
+    for ln in reversed(lines[:i]):
+        if depth(ln) < d:
+            out.append(ln.lstrip(" :+-").split(" ")[0])
+            d = depth(ln)
+    return out
+
+
+def test_bucket_filter_sits_below_explode_and_index_joins(spark, tmp_path):
+    """GraphTableWriter builds pseudonymize(per_turn_triples(t)) once and
+    slices it per bucket: the ``_bucket`` filter must land below the
+    explode and both index joins, so a bucket transforms only its own
+    rows. Both operators pass ``_bucket`` through for this."""
+    t = synthetic_transcripts(spark, n_convs=10, turns_per_conv=3)
+    path = str(tmp_path / "t")
+    t.withColumn("_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(4))).write.parquet(path)
+    out = pseudonymize(
+        per_turn_triples(spark.read.parquet(path)), build_type_index(extract_triples(t)),
+        default_rules(), Pseudonymizer.create("sha256", SECRET),
+    ).filter(F.col("_bucket") == 1)
+    lines = out._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    filters = [
+        i for i, ln in enumerate(lines)
+        if ln.lstrip(" :+-").startswith("Filter") and "_bucket" in ln
+    ]
+    assert filters
+    for i in filters:
+        above = _ancestors(lines, i)
+        assert "Generate" in above and above.count("Join") == 2, "\n".join(lines)
+
+
 def test_pass2_joins_use_hash_join_not_nested_loop(spark, tmp_path):
     t = synthetic_transcripts(spark, n_convs=10, turns_per_conv=3)
     path = str(tmp_path / "g")

@@ -35,13 +35,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..schemas import KIND_IRI, KIND_LITERAL, TRIPLE_SCHEMA
+from .. import RDF_TYPE
+from ..schemas import KIND_IRI, KIND_LITERAL, TRANSCRIPT_SCHEMA, TRIPLE_SCHEMA
 
 KG = "http://example.org/kg/"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 XSD_DATETIME = "http://www.w3.org/2001/XMLSchema#dateTime"
 XSD_INTEGER = "http://www.w3.org/2001/XMLSchema#integer"
 TS_FMT = "yyyy-MM-dd'T'HH:mm:ss"
+TRANSCRIPT_COLS = TRANSCRIPT_SCHEMA.fieldNames()
 
 _MENTION_USER = r"@user(\d+)"
 _MENTION_ITEM = r"#item(\d+)"
@@ -93,7 +94,12 @@ def per_turn_triples(transcripts: DataFrame) -> DataFrame:
     independently yields its turn triples (type/partOf/role/text/ts/
     tool/mentions) via one array<struct> + explode — a single narrow
     scan, shuffle-free, whole-stage-codegen'd. Also used unchanged by
-    the Structured Streaming path (it is append-only per row)."""
+    the Structured Streaming path (it is append-only per row).
+
+    Input columns other than the transcript columns pass through to
+    every triple of their row, so a caller can slice the output by a
+    column it added (plans/lineage.py filters on ``_bucket``)."""
+    extra = [c for c in transcripts.columns if c not in TRANSCRIPT_COLS]
     t = _with_mentions(transcripts)
     conv = _conv_iri()
 
@@ -130,6 +136,7 @@ def per_turn_triples(transcripts: DataFrame) -> DataFrame:
         F.lit(KIND_IRI).alias("s_kind"),
         _turn_iri().alias("s_value"),
         F.explode(F.concat(base, ts_arr, tool_arr, user_arr, item_arr)).alias("x"),
+        *extra,
     ).select(
         "s_kind",
         "s_value",
@@ -138,6 +145,7 @@ def per_turn_triples(transcripts: DataFrame) -> DataFrame:
         F.col("x.o_value").alias("o_value"),
         F.col("x.o_datatype").alias("o_datatype"),
         F.col("x.o_lang").alias("o_lang"),
+        *extra,
     )
 
 
@@ -248,7 +256,8 @@ def extract_triples(transcripts: DataFrame) -> DataFrame:
     parallel and shuffle-free; the aggregates shuffle only
     (conv_id, entity) pairs.
     """
-    return per_turn_triples(transcripts).unionByName(derived_triples(transcripts))
+    t = transcripts.select(*TRANSCRIPT_COLS)
+    return per_turn_triples(t).unionByName(derived_triples(t))
 
 
 def extract_triples_pandas(transcripts: DataFrame) -> DataFrame:

@@ -56,18 +56,18 @@ def prune_index_for_rules(index_df: DataFrame, relevant_types) -> DataFrame:
 def join_types(
     triples: DataFrame,
     index_df: DataFrame,
-    rules: Rules | None = None,
+    rules: Rules,
     key_fn=None,
 ) -> DataFrame:
     """Attach subj_types / obj_types arrays via two left-outer joins.
 
-    With ``rules`` given, each side joins against a rule-pruned index:
-    the object side only needs ``of_type`` types (node rules are the
-    only object-side lookup, rules.rs:172-176), the subject side needs
-    ``of_type`` + the ``on_type_predicate`` keys. No broadcast hint is
-    forced: AQE converts to a broadcast join at runtime when the pruned
-    side is small (the common case), and keeps a shuffled join when the
-    index is genuinely huge — exactly the 10^12-turn behavior we want.
+    Each side joins against a rule-pruned index: the object side only
+    needs ``of_type`` types (node rules are the only object-side lookup,
+    rules.rs:172-176), the subject side needs ``of_type`` + the
+    ``on_type_predicate`` keys. No broadcast hint is forced: AQE
+    converts to a broadcast join at runtime when the pruned side is
+    small (the common case), and keeps a shuffled join when the index
+    is genuinely huge — exactly the 10^12-turn behavior we want.
 
     ``key_fn`` transforms the triples-side serialized term into the
     index's key space (identity for the native string-keyed parquet
@@ -75,27 +75,24 @@ def join_types(
     """
     if key_fn is None:
         key_fn = lambda c: c  # noqa: E731
-    subj_side, obj_side = index_df, index_df
-    if rules is not None:
-        # ONE pruned index for BOTH sides (guide §2.4: shared exchange).
-        # The object side only consults node_of_type, so pruning it to
-        # the same union set as the subject side is mask-invariant:
-        # extra on_type_predicate types in obj_types cannot make
-        # arrays_overlap(obj_types, of_type) true, and entries kept
-        # only for those types yield overlap=false exactly like the
-        # NULL the tighter pruning produced. Identical build subtrees
-        # canonicalize equal, so the second join reuses the first's
-        # broadcast (plan shows one BroadcastExchange + ReusedExchange
-        # instead of two builds, each with its own index scan).
-        subj_side = prune_index_for_rules(
-            index_df,
-            set(rules.node_of_type) | set(rules.object_on_type_predicate),
-        )
-        obj_side = subj_side
-    subj_index = subj_side.select(
+    # ONE pruned index for BOTH sides (guide §2.4: shared exchange).
+    # The object side only consults node_of_type, so pruning it to the
+    # same union set as the subject side is mask-invariant: extra
+    # on_type_predicate types in obj_types cannot make
+    # arrays_overlap(obj_types, of_type) true, and entries kept only for
+    # those types yield overlap=false exactly like the NULL the tighter
+    # pruning produced. Identical build subtrees canonicalize equal, so
+    # the second join reuses the first's broadcast (plan shows one
+    # BroadcastExchange + ReusedExchange instead of two builds, each
+    # with its own index scan).
+    pruned = prune_index_for_rules(
+        index_df,
+        set(rules.node_of_type) | set(rules.object_on_type_predicate),
+    )
+    subj_index = pruned.select(
         F.col("subject_key").alias("_subj_key"), F.col("types").alias("subj_types")
     )
-    obj_index = obj_side.select(
+    obj_index = pruned.select(
         F.col("subject_key").alias("_obj_key"), F.col("types").alias("obj_types")
     )
     return (

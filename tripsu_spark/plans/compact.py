@@ -40,14 +40,11 @@ from pyspark.sql import functions as F
 
 from ..operators.extract import KG, RDF_TYPE, XSD_DATETIME, XSD_INTEGER
 from ..schemas import KIND_BLANK, KIND_IRI, KIND_LITERAL
+from .pipeline import TRIPLE_COLS
 
 RDF_NS = RDF_TYPE[: RDF_TYPE.rindex("#") + 1]
 # code 0 = verbatim, 1 = KG base, 2 = RDF namespace
 _PREFIXES = [(1, KG), (2, RDF_NS)]
-
-TRIPLE_COLS = [
-    "s_kind", "s_value", "predicate", "o_kind", "o_value", "o_datatype", "o_lang",
-]
 
 COMPACT_COLS = [
     "s_kind", "s_value", "s_pfx", "predicate", "p_pfx",
@@ -189,12 +186,18 @@ def compact_triples(triples: DataFrame, level: int = 1) -> DataFrame:
     )
 
 
+def storage_level(columns: list[str]) -> int:
+    """Storage level (0, 1 or 2) of a stored frame, from its columns."""
+    return 2 if "s_kc" in columns else 1 if "s_pfx" in columns else 0
+
+
 def maybe_expand(df: DataFrame) -> DataFrame:
     """Expand iff the frame carries compact-storage columns — lets read
     paths work against every storage format (standard, level 1, level 2)."""
-    if "s_kc" in df.columns:
+    level = storage_level(df.columns)
+    if level == 2:
         return expand_triples2(df)
-    return expand_triples(df) if "s_pfx" in df.columns else df
+    return expand_triples(df) if level == 1 else df
 
 
 def expand_triples(compact: DataFrame) -> DataFrame:

@@ -14,6 +14,9 @@ the exact spark-submit swap recipe is ``IcebergFormat``. Layout:
   ``data/bucket=<k>/`` parquet + ``_manifests/bucket-<k>.json`` with
   snapshot id, row count and an order-insensitive checksum (XOR of
   per-row xxhash64 over the canonical serialization);
+- malformed transcript rows are written once, before any bucket
+  commits, to ``_quarantine/bucket=<k>/`` with per-bucket counts in
+  ``_manifests/quarantine.json``;
 - a killed job restarts and skips every bucket whose manifest exists
   (commit order: data first, manifest last, so a torn write re-runs);
 - ``metrics.json`` aggregates per-bucket counts at the end.
@@ -29,14 +32,21 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import RDF_TYPE
 from ..crypto import Pseudonymizer
 from ..functions.terms import serialize_triple_line
-from ..operators.extract import derived_triples, extract_triples, per_turn_triples
+from ..operators.extract import (
+    TRANSCRIPT_COLS,
+    derived_triples,
+    extract_triples,
+    per_turn_triples,
+)
 from ..operators.index import build_type_index
 from ..rules import Rules
+from .compact import compact_triples, maybe_expand, storage_level
 from .pipeline import pseudonymize
 from .table_format import ParquetFormat, TableFormat
 
@@ -54,8 +64,6 @@ def predicate_partition_col():
     sf0.1: partitioned write +0.89s over flat with 14 values, +0.17s
     with 2).
     """
-    from ..operators.extract import RDF_TYPE
-
     return F.when(F.col("predicate") == RDF_TYPE, F.lit(RDF_TYPE_PART)).otherwise(
         F.lit("data")
     )
@@ -70,8 +78,6 @@ def read_for_index(spark: SparkSession, graph_path: str) -> DataFrame:
     """Read ONLY the rdf:type partition of a stored graph table (the
     partition-pruned pass-1 input; `.explain` shows PartitionFilters).
     Works against both storage formats (plans/compact.py)."""
-    from .compact import maybe_expand
-
     return maybe_expand(
         spark.read.parquet(graph_path)
         .filter(F.col("pred_part") == RDF_TYPE_PART)
@@ -86,7 +92,7 @@ def bucket_col(n_buckets: int):
 # A transcript row missing any of these cannot mint valid IRIs/triples
 # (null conv_id/turn_idx break the subject IRI; null role/text break
 # literal objects). SURVEY §4: such rows must NOT be silently dropped —
-# they are quarantined per bucket with counts in the bucket manifest.
+# they are quarantined per bucket with counts in the bucket manifests.
 def _invalid_transcript():
     return (
         F.col("conv_id").isNull()
@@ -169,12 +175,9 @@ class GraphTableWriter:
                     out.append(json.load(fh))
         return out
 
-    def _commit_snapshot(self, snapshot_id: str, schema_json: str) -> None:
-        buckets = {}
-        for b in sorted(self.committed_buckets(), key=str):
-            with open(self._manifest_path(b)) as fh:
-                m = json.load(fh)
-            buckets[str(b)] = {
+    def _commit_snapshot(self, snapshot_id: str, schema_json: str, manifests: dict) -> None:
+        buckets = {
+            str(b): {
                 "path": os.path.relpath(
                     os.path.join(self.data_dir, f"bucket={b}"), self.base_path
                 ),
@@ -182,6 +185,8 @@ class GraphTableWriter:
                 "checksum": m["checksum"],
                 "quarantined": m.get("quarantined", 0),
             }
+            for b, m in sorted(manifests.items(), key=lambda kv: str(kv[0]))
+        }
         seq = len(self.snapshots()) + 1
         _atomic_write_json(
             os.path.join(self.snapshot_dir, f"{seq:06d}-{snapshot_id}.json"),
@@ -205,6 +210,14 @@ class GraphTableWriter:
                 out.add(int(raw) if raw.isdigit() else raw)
         return out
 
+    def _manifests(self) -> dict:
+        """Every committed bucket's manifest in this version, by bucket."""
+        out = {}
+        for b in self.committed_buckets():
+            with open(self._manifest_path(b)) as fh:
+                out[b] = json.load(fh)
+        return out
+
     def run(
         self,
         spark: SparkSession,
@@ -212,13 +225,11 @@ class GraphTableWriter:
         rules: Rules,
         hasher: Pseudonymizer,
         snapshot_id: str | None = None,
-        fail_after_bucket: int | None = None,
         overwrite: bool = False,
         store_compact: bool | int = False,
     ) -> dict:
         """Process every uncommitted bucket; returns metrics dict.
 
-        ``fail_after_bucket`` injects a crash for the resume test.
         The global type index is built over ALL transcripts first (pass
         1 must see every rdf:type statement regardless of bucket) and
         persisted once as the pass-2 broadcast side.
@@ -234,11 +245,49 @@ class GraphTableWriter:
         snapshot_id = snapshot_id or f"snap-{int(time.time() * 1000)}"
         if overwrite and (self.committed_buckets() or self.snapshots()):
             self._set_version(self.version + 1)
+        level = int(store_compact)
+        manifests = self._manifests()
+        if manifests:
+            # A table version must be one physical layout: resuming with
+            # a different --store-compact than the committed buckets
+            # would write mixed schemas into one version and read() would
+            # return silently wrong triples (schema union, no error).
+            # Refuse. All buckets of a version share one level, so
+            # checking one suffices.
+            b = min(manifests, key=str)
+            committed_level = manifests[b].get("storage_level")
+            if committed_level is None:
+                # Legacy manifest (committed before storage_level was
+                # recorded): the key's absence does NOT mean level 0 —
+                # sniff the committed bucket's physical parquet schema
+                # instead of guessing (a level-1 table misread as 0
+                # would refuse its own correct resume and steer the
+                # operator toward appending level-0 buckets into a
+                # level-1 version).
+                committed_level = storage_level(
+                    self.fmt.read(spark, os.path.join(self.data_dir, f"bucket={b}")).columns
+                )
+            if committed_level != level:
+                raise ValueError(
+                    f"resume storage-level mismatch: bucket {b} of this table "
+                    f"version was committed at storage level {committed_level}, "
+                    f"but this run requested {level}; rerun with "
+                    f"store_compact={committed_level}, or start a new version "
+                    f"with overwrite=True"
+                )
+        metrics: dict = {
+            "snapshot_id": snapshot_id, "buckets": {}, "skipped": sorted(manifests, key=str)
+        }
 
-        # Split valid/quarantine ONCE; every pass below sees valid rows
-        # only, and malformed rows land in _quarantine/bucket=<k> with
-        # per-bucket counts in the manifests (audit trail, SURVEY §4).
-        valid = transcripts.filter(~_invalid_transcript())
+        # Project once to the transcript columns plus each row's bucket;
+        # a null conv_id (a quarantine case) hashes to bucket 0 so every
+        # malformed row still has a deterministic home bucket. Every
+        # pass below sees valid rows only.
+        bucketed = transcripts.select(
+            *TRANSCRIPT_COLS,
+            F.coalesce(bucket_col(self.n_buckets), F.lit(0)).alias("_bucket"),
+        )
+        valid = bucketed.filter(~_invalid_transcript())
 
         index_path = os.path.join(
             self.base_path,
@@ -246,123 +295,75 @@ class GraphTableWriter:
         )
         index_manifest = os.path.join(self.manifest_dir, "type_index.json")
         if not os.path.exists(index_manifest):
+            obs = Observation("type_index")
             index_df = build_type_index(extract_triples(valid))
-            self.fmt.write(index_df, index_path)
-            n = self.fmt.read(spark, index_path).count()
+            self.fmt.write(index_df.observe(obs, F.count(F.lit(1)).alias("n")), index_path)
             _atomic_write_json(index_manifest, {
-                "snapshot_id": snapshot_id, "rows": n, "stage": "pass1"
+                "snapshot_id": snapshot_id, "rows": obs.get["n"], "stage": "pass1"
             })
         index_df = self.fmt.read(spark, index_path)
 
-        done = self.committed_buckets()
-        # A table version must be one physical layout: resuming with a
-        # different --store-compact than the committed buckets would
-        # write mixed schemas into one version and read() would return
-        # silently wrong triples (schema union, no error). Refuse.
-        for b in sorted(done, key=str):
-            with open(self._manifest_path(b)) as fh:
-                committed_level = json.load(fh).get("storage_level")
-            if committed_level is None:
-                # Legacy manifest (committed before storage_level was
-                # recorded): the key's absence does NOT mean level 0 —
-                # sniff the committed bucket's physical parquet schema
-                # for the compact-storage marker columns instead of
-                # guessing (a level-1 table misread as 0 would refuse
-                # its own correct resume and steer the operator toward
-                # appending level-0 buckets into a level-1 version).
-                cols = self.fmt.read(
-                    spark, os.path.join(self.data_dir, f"bucket={b}")
-                ).columns
-                committed_level = 2 if "s_kc" in cols else 1 if "s_pfx" in cols else 0
-            if committed_level != int(store_compact):
-                raise ValueError(
-                    f"resume storage-level mismatch: bucket {b} of this table "
-                    f"version was committed at storage level {committed_level}, "
-                    f"but this run requested {int(store_compact)}; rerun with "
-                    f"store_compact={committed_level}, or start a new version "
-                    f"with overwrite=True"
-                )
-            break  # all buckets of a version share one level; checking one suffices
-        metrics: dict = {"snapshot_id": snapshot_id, "buckets": {}, "skipped": sorted(done, key=str)}
-        # null conv_id (a quarantine case) hashes to bucket 0 so every
-        # malformed row still has a deterministic home bucket.
-        bucketed = transcripts.withColumn(
-            "_bucket", F.coalesce(bucket_col(self.n_buckets), F.lit(0))
-        )
+        # Malformed rows land in _quarantine/bucket=<k> in ONE write
+        # before any bucket commits (audit trail, SURVEY §4); the bucket
+        # manifests take their counts from quarantine.json.
+        quarantine_manifest = os.path.join(self.manifest_dir, "quarantine.json")
+        if not os.path.exists(quarantine_manifest):
+            obs = Observation("quarantine")
+            bad = bucketed.filter(_invalid_transcript()).withColumnRenamed("_bucket", "bucket")
+            bad.observe(
+                obs, *[F.count_if(F.col("bucket") == b).alias(str(b)) for b in range(self.n_buckets)]
+            ).write.mode("overwrite").partitionBy("bucket").json(self.quarantine_dir)
+            _atomic_write_json(quarantine_manifest, {
+                "snapshot_id": snapshot_id, "buckets": obs.get
+            })
+        with open(quarantine_manifest) as fh:
+            quarantined = json.load(fh)["buckets"]
 
         # Per-turn triples are conversation-local -> one bucket each.
+        # The pipeline is built once; each bucket's filter on _bucket
+        # is pushed below the explode and both index joins onto the
+        # scan, so a bucket reads and transforms only its own rows.
         # Derived triples (entity typing, link scores) are GLOBAL facts
         # and get their own single commit, so the union over all
         # commits equals extract_triples(all) exactly regardless of
         # n_buckets (no cross-bucket duplicate type rows).
-        units: list[tuple[int | str, object, object]] = [
-            (
-                b,
-                per_turn_triples(
-                    bucketed.filter(
-                        (F.col("_bucket") == b) & ~_invalid_transcript()
-                    ).drop("_bucket")
-                ),
-                bucketed.filter(
-                    (F.col("_bucket") == b) & _invalid_transcript()
-                ).drop("_bucket"),
-            )
+        per_turn = pseudonymize(per_turn_triples(valid), index_df, rules, hasher)
+        units = [
+            (b, per_turn.filter(F.col("_bucket") == b).drop("_bucket"))
             for b in range(self.n_buckets)
         ]
-        units.append(("derived", derived_triples(valid), None))
+        units.append(("derived", pseudonymize(derived_triples(valid), index_df, rules, hasher)))
 
-        for bucket, triples, quarantine in units:
-            if bucket in done:
+        for bucket, out in units:
+            if bucket in manifests:
                 continue
-            out = pseudonymize(triples, index_df, rules, hasher).withColumn(
-                "pred_part", predicate_partition_col()
-            )
-            if store_compact:
-                from .compact import compact_triples
-
+            out = out.withColumn("pred_part", predicate_partition_col())
+            if level:
                 # pred_part is computed BEFORE compaction (level 2
                 # dictionary-codes the predicate column away); it passes
                 # through compact_triples untouched.
-                out = compact_triples(out, level=int(store_compact))
+                out = compact_triples(out, level=level)
             data_path = os.path.join(self.data_dir, f"bucket={bucket}")
             self.fmt.write(out, data_path, partition_by=["pred_part"])
-            n_bad = 0
-            if quarantine is not None:
-                q_path = os.path.join(self.quarantine_dir, f"bucket={bucket}")
-                quarantine.write.mode("overwrite").json(q_path)
-                n_bad = spark.read.json(q_path).count() if _has_data(q_path) else 0
-            from .compact import maybe_expand
-
             n, checksum = triples_checksum(
                 maybe_expand(self.fmt.read(spark, data_path).drop("pred_part"))
             )
-            _atomic_write_json(self._manifest_path(bucket), {
+            n_bad = quarantined.get(str(bucket), 0)
+            manifests[bucket] = {
                 "snapshot_id": snapshot_id,
                 "partition_id": bucket,
                 "row_count": n,
                 "checksum": checksum,
                 "quarantined": n_bad,
-                "storage_level": int(store_compact),
-            })
+                "storage_level": level,
+            }
+            _atomic_write_json(self._manifest_path(bucket), manifests[bucket])
             metrics["buckets"][str(bucket)] = {
                 "rows": n, "checksum": checksum, "quarantined": n_bad
             }
-            if (
-                fail_after_bucket is not None
-                and isinstance(bucket, int)
-                and bucket >= fail_after_bucket
-            ):
-                raise RuntimeError(f"injected failure after bucket {bucket}")
 
-        total = sum(m["rows"] for m in metrics["buckets"].values())
-        total_bad = sum(m["quarantined"] for m in metrics["buckets"].values())
-        for b in sorted(done, key=str):
-            with open(self._manifest_path(b)) as fh:
-                manifest = json.load(fh)
-            total += manifest["row_count"]
-            total_bad += manifest.get("quarantined", 0)
-        metrics["total_rows"] = total
-        metrics["total_quarantined"] = total_bad
+        metrics["total_rows"] = sum(m["row_count"] for m in manifests.values())
+        metrics["total_quarantined"] = sum(m.get("quarantined", 0) for m in manifests.values())
         _atomic_write_json(os.path.join(self.base_path, "metrics.json"), metrics)
         # run completed -> commit a snapshot (skip pure no-op resumes so
         # an idempotent re-run doesn't duplicate the log)
@@ -372,7 +373,7 @@ class GraphTableWriter:
                 spark,
                 os.path.join(self.data_dir, f"bucket={self.n_buckets - 1 if self.n_buckets else 0}"),
             )
-            self._commit_snapshot(snapshot_id, sample.drop("pred_part").schema.json())
+            self._commit_snapshot(snapshot_id, sample.drop("pred_part").schema.json(), manifests)
         return metrics
 
     def read(self, spark: SparkSession, as_of: str | None = None) -> DataFrame:
@@ -380,8 +381,6 @@ class GraphTableWriter:
         to ``as_of=<snapshot_id>``. Physical schema differences between
         snapshots (e.g. compact vs standard storage) are resolved here —
         callers always get the same logical columns."""
-        from .compact import maybe_expand
-
         snaps = self.snapshots()
         if not snaps:
             # No committed snapshot yet. Mid-run: read the buckets the
@@ -419,19 +418,6 @@ class GraphTableWriter:
         return maybe_expand(
             self.fmt.read_union(spark, paths, base).drop("pred_part", "bucket")
         )
-
-
-def _has_data(path: str) -> bool:
-    """True if a written json/parquet dir contains any part files with
-    bytes (an all-empty-partition write yields only a _SUCCESS marker,
-    which spark.read.json cannot infer a schema from)."""
-    try:
-        return any(
-            f.startswith("part-") and os.path.getsize(os.path.join(path, f)) > 0
-            for f in os.listdir(path)
-        )
-    except FileNotFoundError:
-        return False
 
 
 def _atomic_write_json(path: str, obj: dict) -> None:

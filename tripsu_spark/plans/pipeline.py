@@ -30,12 +30,14 @@ def pseudonymize(
 ) -> DataFrame:
     """Pass 2 core: mask + conditional rewrite (pseudo.rs:47-77).
     ``key_fn`` maps serialized terms into the index's key space (see
-    operators/masking.py::join_types)."""
+    operators/masking.py::join_types). Columns other than the triple
+    columns pass through unchanged, after them."""
+    extra = [c for c in triples.columns if c not in TRIPLE_COLS]
     masked = apply_masks(triples, index_df, rules, key_fn=key_fn)
     rewritten = pseudo_triple(
         masked, F.col("mask_subject"), F.col("mask_object"), hasher
     )
-    return rewritten.select(*TRIPLE_COLS)
+    return rewritten.select(*TRIPLE_COLS, *extra)
 
 
 DEFAULT_RULES_YAML = """
