@@ -17,7 +17,9 @@ from tripsu_spark.operators.extract import (
     dedupe_triples,
     extract_triples,
     extract_triples_pandas,
+    type_triples,
 )
+from tripsu_spark.operators.index import build_type_index
 from tripsu_spark.schemas import TRANSCRIPT_SCHEMA
 from tripsu_spark.sources.transcripts import synthetic_transcripts, transcripts_from_events
 
@@ -51,6 +53,32 @@ def test_catalyst_and_pandas_paths_identical_on_synthetic(spark):
     a = as_set(dedupe_triples(extract_triples(t)))
     b = as_set(dedupe_triples(extract_triples_pandas(t)))
     assert a == b and len(a) > 0
+
+
+def test_type_triples_are_the_rdf_type_rows_of_extraction(spark, tiny):
+    """Pass 1's input: ``type_triples`` holds exactly the rdf:type rows
+    of ``extract_triples`` (as a set), and the index built over either
+    is the same, on clean rows and on malformed ones (NULL conv_id,
+    role, text; a NULL-text row whose conversation has no other row)."""
+    dirty = spark.createDataFrame(
+        [
+            (None, 0, "user", "null conv @user1 #item2", None, None),
+            ("conv-1", 1, None, "null role", None, None),
+            ("conv-2", 2, "user", None, None, None),
+            ("only-null-text", 0, "user", None, "search", TS),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    t = synthetic_transcripts(spark, n_convs=40, turns_per_conv=6).unionByName(
+        tiny).unionByName(dirty)
+    want = as_set(extract_triples(t).filter(F.col("predicate") == RDF_TYPE))
+    assert as_set(type_triples(t)) == want and len(want) > 300
+
+    def index(triples):
+        rows = build_type_index(triples).collect()
+        return {(r["subject_key"], tuple(sorted(r["types"]))) for r in rows}
+
+    assert index(type_triples(t)) == index(extract_triples(t))
 
 
 def test_extraction_deterministic(spark, tiny):

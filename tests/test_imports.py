@@ -74,3 +74,57 @@ def test_job_session_leaves_master_to_the_launcher(path):
     ``get_spark`` pins ``local[N]`` and would override it."""
     names = _names(path)
     assert "get_submit_spark" in names and "get_spark" not in names
+
+
+def _wraps_target(node: ast.AST) -> bool:
+    """``inheritable_thread_target(fn)`` or ``inheritable_thread_target(spark)(fn)``."""
+    while isinstance(node, ast.Call):
+        func = node.func
+        name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+        if name == "inheritable_thread_target":
+            return True
+        node = func
+    return False
+
+
+def _thread_targets(source: str):
+    """(line, wrapped?) for every ``<pool>.submit(target, ...)`` and
+    ``Thread(target=...)`` call in ``source``."""
+    for node in ast.walk(ast.parse(source)):
+        if not isinstance(node, ast.Call):
+            continue
+        func = node.func
+        name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+        if name == "submit" and node.args:
+            yield node.lineno, _wraps_target(node.args[0])
+        elif name == "Thread":
+            target = [k.value for k in node.keywords if k.arg == "target"]
+            target += node.args[1:2]  # Thread(group, target, ...)
+            yield node.lineno, bool(target) and _wraps_target(target[0])
+
+
+PROGRAM = sorted(p for d in ("tripsu_spark", "jobs") for p in (ROOT / d).rglob("*.py"))
+
+
+def test_threads_inherit_the_callers_spark_properties():
+    """A Spark job started on a plain pool thread runs without the
+    caller's job group and description, so cancelling the group misses
+    it and per-group metrics do not count it. Every thread target in
+    the program goes through ``pyspark.util.inheritable_thread_target``."""
+    found, bare = 0, []
+    for path in PROGRAM:
+        for line, wrapped in _thread_targets(path.read_text(encoding="utf-8")):
+            found += 1
+            if not wrapped:
+                bare.append(f"{path.relative_to(ROOT)}:{line}")
+    assert found >= 2  # the writer's quarantine and unit commits
+    assert not bare, f"thread targets without inheritable_thread_target: {bare}"
+
+
+def test_thread_guard_flags_a_bare_target():
+    lineage = (ROOT / "tripsu_spark" / "plans" / "lineage.py").read_text(encoding="utf-8")
+    bare = lineage.replace("inheritable_thread_target(spark)(", "(")
+    assert bare != lineage
+    assert not all(w for _, w in _thread_targets(bare))
+    assert not all(w for _, w in _thread_targets("Thread(target=work).start()"))
+    assert all(w for _, w in _thread_targets("Thread(target=inheritable_thread_target(work))"))

@@ -9,8 +9,12 @@ from tripsu_spark.crypto import Pseudonymizer
 from tripsu_spark.plans import lineage
 from tripsu_spark.plans.lineage import GraphTableWriter, read_for_index
 from tripsu_spark.plans.oracle import BENCH_SECRET
-from tripsu_spark.plans.pipeline import default_rules
+from tripsu_spark.plans.pipeline import TRIPLE_COLS, default_rules
+from tripsu_spark.plans.table_format import ParquetFormat
+from tripsu_spark.schemas import TRANSCRIPT_SCHEMA
 from tripsu_spark.sources.transcripts import synthetic_transcripts
+
+TRANSCRIPT_DDL = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 
 
 @pytest.fixture()
@@ -47,9 +51,165 @@ def _dirty(spark, transcripts):
             ("conv-1", 1, None, "null role", None, None),
             ("conv-2", 2, "user", None, None, None),
         ],
-        schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+        schema=TRANSCRIPT_DDL,
     )
     return transcripts.unionByName(bad)
+
+
+class Spy(ParquetFormat):
+    """ParquetFormat that records every call through the seam."""
+
+    def __init__(self):
+        self.calls = []
+
+    def write(self, df, p, partition_by=None):
+        self.calls.append(("write", p, tuple(partition_by or ())))
+        super().write(df, p, partition_by)
+
+    def read(self, s, p, schema=None):
+        self.calls.append(("read", p))
+        return super().read(s, p, schema)
+
+
+def _manifest_rows(path, units):
+    out = {}
+    for b in units:
+        with open(os.path.join(path, "_manifests", f"bucket-{b}.json")) as fh:
+            m = json.load(fh)
+        out[b] = (m["row_count"], m["checksum"], m["quarantined"])
+    return out
+
+
+# Inputs that leave some or every bucket without rows: a zero-row
+# partitioned parquet write leaves no part file to infer a schema from.
+EMPTY_BUCKET_INPUTS = {
+    "empty-table-3-buckets": (lambda spark: spark.createDataFrame([], TRANSCRIPT_SCHEMA), 3),
+    "two-convs-16-buckets": (
+        lambda spark: synthetic_transcripts(spark, n_convs=2, turns_per_conv=3), 16
+    ),
+    "one-malformed-row-2-buckets": (
+        lambda spark: spark.createDataFrame([(None, 0, "user", "x", None, None)], TRANSCRIPT_DDL),
+        2,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EMPTY_BUCKET_INPUTS))
+def test_commits_inputs_with_empty_buckets(spark, setup, case):
+    """Every unit commits, an empty one with row count and checksum 0,
+    and the table reads back (latest and time-travel) with exactly the
+    committed rows."""
+    _, rules, hasher, path = setup
+    make, n_buckets = EMPTY_BUCKET_INPUTS[case]
+    writer = GraphTableWriter(path, n_buckets=n_buckets)
+    metrics = writer.run(spark, make(spark), rules, hasher, snapshot_id="snap-e")
+    assert writer.committed_buckets() == {*range(n_buckets), "derived"}
+    manifests = _manifest_rows(path, writer.committed_buckets())
+    empty = [b for b, (n, _, _) in manifests.items() if n == 0]
+    assert empty and all(manifests[b][1] == 0 for b in empty)
+    assert writer.read(spark).count() == metrics["total_rows"]
+    assert writer.read(spark, as_of="snap-e").count() == metrics["total_rows"]
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "spy", "catalog"])
+def test_empty_buckets_read_back_as_zero_rows(spark, setup, fmt):
+    """An empty transcript table commits through every format, and the
+    table reads back, latest and time-travel, as zero triple rows."""
+    _, rules, hasher, path = setup
+    table_format = {"parquet": ParquetFormat, "spy": Spy, "catalog": MockCatalogFormat}
+    writer = GraphTableWriter(path, n_buckets=3, table_format=table_format[fmt]())
+    empty = spark.createDataFrame([], TRANSCRIPT_SCHEMA)
+    metrics = writer.run(spark, empty, rules, hasher, snapshot_id="snap-0")
+    assert metrics["total_rows"] == 0
+    for frame in (writer.read(spark), writer.read(spark, as_of="snap-0")):
+        assert frame.columns == TRIPLE_COLS and frame.count() == 0
+
+
+def test_every_job_of_a_run_lands_in_the_callers_job_group(spark, setup):
+    """Units commit on pool threads; each must carry the caller's job
+    group (job cancellation and per-group metrics rely on it). Two
+    marker jobs bracket the run: every job id between them is in the
+    group."""
+    transcripts, rules, hasher, path = setup
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def marker(group):
+        sc.setJobGroup(group, group)
+        sc.parallelize([1], 1).count()
+        bus.waitUntilEmpty()
+        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        return job
+
+    try:
+        first = marker("before-run")
+        sc.setJobGroup("writer-run", "writer-run")
+        GraphTableWriter(path, n_buckets=4).run(spark, transcripts, rules, hasher)
+        last = marker("after-run")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    in_group = set(sc.statusTracker().getJobIdsForGroup("writer-run"))
+    assert last - first > 10
+    assert in_group == set(range(first + 1, last))
+
+
+def test_failed_unit_write_leaves_no_manifest_and_resumes(spark, setup):
+    """A write that fails for bucket 1 of 4 leaves no bucket-1.json;
+    the resume then commits the same manifests, totals and rows as a
+    one-shot run."""
+    transcripts, rules, hasher, path = setup
+
+    class FailBucket1Once(ParquetFormat):
+        armed = True
+
+        def write(self, df, p, partition_by=None):
+            if self.armed and p.endswith("bucket=1"):
+                self.armed = False
+                raise RuntimeError("injected write failure")
+            super().write(df, p, partition_by)
+
+    writer = GraphTableWriter(path, n_buckets=4, table_format=FailBucket1Once())
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        writer.run(spark, transcripts, rules, hasher)
+    assert not os.path.exists(os.path.join(path, "_manifests", "bucket-1.json"))
+    resumed = writer.run(spark, transcripts, rules, hasher)
+    assert "1" in resumed["buckets"]
+    assert set(resumed["buckets"]) | set(map(str, resumed["skipped"])) == {
+        "0", "1", "2", "3", "derived"
+    }
+
+    one_shot = GraphTableWriter(path + "-once", n_buckets=4)
+    once = one_shot.run(spark, transcripts, rules, hasher)
+    units = [0, 1, 2, 3, "derived"]
+    assert _manifest_rows(path, units) == _manifest_rows(path + "-once", units)
+    assert resumed["total_rows"] == once["total_rows"]
+    assert resumed["total_quarantined"] == once["total_quarantined"]
+    got = {tuple(r) for r in writer.read(spark).collect()}
+    assert got == {tuple(r) for r in one_shot.read(spark).collect()}
+
+
+def test_each_unit_read_back_is_one_job(spark, setup):
+    """A unit's read-back (read with the written schema, then count and
+    checksum) runs one Spark job: no schema-inference job, no separate
+    aggregate and collect."""
+    transcripts, rules, hasher, path = setup
+
+    class GroupedReads(ParquetFormat):
+        def read(self, s, p, schema=None):
+            if "bucket=" in p:
+                # pool thread: the group holds this thread's next jobs
+                s.sparkContext.setJobGroup(f"read-back {p}", p)
+            return super().read(s, p, schema)
+
+    GraphTableWriter(path, n_buckets=2, table_format=GroupedReads()).run(
+        spark, transcripts, rules, hasher
+    )
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    for unit in (0, 1, "derived"):
+        group = f"read-back {os.path.join(path, 'data', f'bucket={unit}')}"
+        assert len(tracker.getJobIdsForGroup(group)) == 1, group
 
 
 def test_full_run_writes_manifests_and_metrics(spark, setup):
@@ -298,28 +458,14 @@ def test_table_format_seam(spark, setup):
     """The physical-format seam: a custom TableFormat sees every table
     read/write; the Iceberg adapter satisfies the interface and
     fail-fasts with the swap recipe when the runtime is absent."""
-    from tripsu_spark.plans.table_format import (
-        IcebergFormat,
-        ParquetFormat,
-        TableFormat,
-    )
+    from tripsu_spark.plans.table_format import IcebergFormat, TableFormat
 
     transcripts, rules, hasher, path = setup
 
-    calls = []
-
-    class Spy(ParquetFormat):
-        def write(self, df, p, partition_by=None):
-            calls.append(("write", p, tuple(partition_by or ())))
-            super().write(df, p, partition_by)
-
-        def read(self, s, p):
-            calls.append(("read", p))
-            return super().read(s, p)
-
-    writer = GraphTableWriter(path + "-fmt", n_buckets=2, table_format=Spy())
+    spy = Spy()
+    writer = GraphTableWriter(path + "-fmt", n_buckets=2, table_format=spy)
     writer.run(spark, transcripts, rules, hasher)
-    writes = [c for c in calls if c[0] == "write"]
+    writes = [c for c in spy.calls if c[0] == "write"]
     # index + 2 buckets + derived, all through the seam
     assert len(writes) == 4
     assert all(c[2] == ("pred_part",) for c in writes if "bucket=" in c[1])
@@ -377,14 +523,14 @@ class MockCatalogFormat:
         self.write_log.append(ident)
         self.partitioning[ident] = tuple(partition_by or ())
 
-    def read(self, spark, path):
+    def read(self, spark, path, schema=None):
         ident = self._ident(path)
         if ident not in self.tables:
             raise RuntimeError(f"mock catalog: no such table {ident}")
         rows, schema = self.tables[ident]
         return spark.createDataFrame(rows, schema)
 
-    def read_union(self, spark, paths, base_path):
+    def read_union(self, spark, paths, base_path, schema=None):
         from tripsu_spark.plans.table_format import _require_paths
 
         _require_paths(paths, base_path)
@@ -408,7 +554,16 @@ def test_mock_catalog_full_lifecycle(spark, setup, crash_after):
     crash_after(0)
     with pytest.raises(RuntimeError, match="injected failure"):
         writer.run(spark, transcripts, rules, hasher)
-    committed_idents = list(catalog.write_log)
+    # the committed tables are the index and the manifest-vouched
+    # buckets; units in flight at the crash may have written data too,
+    # but without a manifest they are not committed
+    def ident(unit):
+        return catalog._ident(os.path.join(writer.data_dir, f"bucket={unit}"))
+
+    committed_idents = [catalog._ident(os.path.join(path + "-cat", "type_index"))]
+    committed_idents += [ident(b) for b in writer.committed_buckets()]
+    assert writer.committed_buckets() == {0}
+    log_at_crash = list(catalog.write_log)
     # mid-run read: manifest-vouched bucket tables only, via read_union
     assert writer.read(spark).count() > 0
 
@@ -417,8 +572,11 @@ def test_mock_catalog_full_lifecycle(spark, setup, crash_after):
     resumed = GraphTableWriter(path + "-cat", n_buckets=3, table_format=catalog)
     m = resumed.run(spark, transcripts, rules, hasher, snapshot_id="snap-a")
     assert set(m["buckets"].keys()) == {"1", "2", "derived"}
-    for ident in committed_idents:
-        assert catalog.write_log.count(ident) == 1
+    for i in committed_idents:
+        assert catalog.write_log.count(i) == 1
+    # ... and every uncommitted bucket is written again, once
+    for unit in (1, 2, "derived"):
+        assert catalog.write_log.count(ident(unit)) == log_at_crash.count(ident(unit)) + 1
     # bucket tables carry the partitioning metadata
     assert all(
         catalog.partitioning[i] == ("pred_part",)

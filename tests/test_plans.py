@@ -5,7 +5,7 @@ SURVEY.md §4)."""
 from pyspark.sql import functions as F
 
 from tripsu_spark.crypto import Pseudonymizer
-from tripsu_spark.operators.extract import extract_triples, per_turn_triples
+from tripsu_spark.operators.extract import extract_triples, per_turn_triples, type_triples
 from tripsu_spark.operators.index import build_type_index
 from tripsu_spark.plans.pipeline import default_rules, pseudonymize
 from tripsu_spark.sources.transcripts import synthetic_transcripts
@@ -81,6 +81,16 @@ def test_per_turn_extraction_is_shuffle_free(spark):
     plan = plan_of(per_turn_triples(t))
     assert "Exchange" not in plan
     assert "Generate" in plan  # the single explode
+
+
+def test_pass1_has_one_exchange(spark, tmp_path):
+    """Pass 1 (the type index the writer builds) shuffles once: the
+    index aggregate. Built from ``extract_triples`` it shuffled for the
+    conversation, tool, mention and entity aggregates too."""
+    path = str(tmp_path / "t")
+    synthetic_transcripts(spark, n_convs=10, turns_per_conv=3).write.parquet(path)
+    plan = plan_of(build_type_index(type_triples(spark.read.parquet(path))))
+    assert plan.count("Exchange") == 1, plan
 
 
 def _ancestors(lines: list[str], i: int) -> list[str]:

@@ -20,4 +20,3 @@ per-conversation ``applyInPandas`` extraction variant.
 __version__ = "0.1.0"
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-RDF_TYPE_SER = f"<{RDF_TYPE}>"

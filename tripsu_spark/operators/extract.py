@@ -246,6 +246,57 @@ def derived_triples(transcripts: DataFrame) -> DataFrame:
     )
 
 
+def type_triples(transcripts: DataFrame) -> DataFrame:
+    """Every rdf:type statement ``extract_triples`` makes, from one
+    ``explode`` per row and no aggregate: the pass-1 input (tripsu's
+    pass 1 reads only rdf:type statements, reference src/index.rs).
+
+    Each row yields its Turn typing, its Conversation and Tool typing,
+    and per mention the User/Item typing and the EntityLink typing.
+    Rows repeat across turns (a conversation is typed once per turn);
+    ``build_type_index``'s ``collect_set`` removes the repeats, so the
+    index equals the one built from ``extract_triples``."""
+    t = _with_mentions(transcripts)
+
+    def row(s_value, type_local):
+        return F.struct(s_value.alias("s"), F.lit(KG + type_local).alias("o"))
+
+    def mention_rows(col, kind, type_local):
+        def rows(eid):
+            link = F.concat(F.lit(KG + "link/"), F.col("conv_id"), F.lit(f"/{kind}"), eid)
+            return F.array(
+                row(F.concat(F.lit(f"{KG}{kind}/"), eid), type_local), row(link, "EntityLink")
+            )
+
+        return F.flatten(F.transform(F.col(col), rows))
+
+    tool_arr = F.filter(
+        F.array(row(F.concat(F.lit(KG + "tool/"), F.col("tool")), "Tool")),
+        lambda _: F.col("tool").isNotNull(),
+    )
+    # A NULL text makes the mention arrays NULL; like per_turn_triples
+    # (no turn triples) and derived_triples (no mentions), such a row
+    # then types only its conversation and tool.
+    turn_arr = F.concat(
+        F.array(row(_turn_iri(), "Turn")),
+        mention_rows("_users", "user", "User"),
+        mention_rows("_items", "item", "Item"),
+    )
+    return t.select(
+        F.explode(
+            F.concat(
+                F.array(row(_conv_iri(), "Conversation")),
+                tool_arr,
+                F.coalesce(turn_arr, F.array().cast("array<struct<s:string,o:string>>")),
+            )
+        ).alias("x")
+    ).select(
+        *_subj(F.col("x.s")),
+        F.lit(RDF_TYPE).alias("predicate"),
+        *_iri(F.col("x.o")),
+    )
+
+
 def extract_triples(transcripts: DataFrame) -> DataFrame:
     """Pure-Catalyst extraction, scan-frugal by construction.
 

@@ -10,20 +10,27 @@ the exact spark-submit swap recipe is ``IcebergFormat``. Layout:
 - the transcript keyspace is split into ``n_buckets`` deterministic
   conv_id buckets (xxhash64; bucket == Spark shuffle hash semantics is
   NOT assumed — the bucket is data, not placement);
-- each bucket is processed and committed independently:
-  ``data/bucket=<k>/`` parquet + ``_manifests/bucket-<k>.json`` with
-  snapshot id, row count and an order-insensitive checksum (XOR of
-  per-row xxhash64 over the canonical serialization);
-- malformed transcript rows are written once, before any bucket
-  commits, to ``_quarantine/bucket=<k>/`` with per-bucket counts in
-  ``_manifests/quarantine.json``;
+- each bucket, and the global ``derived`` unit, is committed
+  independently: ``data/bucket=<k>/`` parquet +
+  ``_manifests/bucket-<k>.json`` with snapshot id, row count and an
+  order-insensitive checksum (XOR of per-row xxhash64 over the
+  canonical serialization, read back from the written files);
+- the units are written and read back concurrently, at most one per
+  core, on pool threads that carry the caller's job group and
+  description; the calling thread writes the manifests, in the order
+  ``type_index.json``, ``quarantine.json``, ``bucket-0.json`` …
+  ``bucket-<n-1>.json``, ``bucket-derived.json``;
+- malformed transcript rows are written once, alongside pass 1 and
+  before any bucket commits, to ``_quarantine/bucket=<k>/`` with
+  per-bucket counts in ``_manifests/quarantine.json``;
 - a killed job restarts and skips every bucket whose manifest exists
-  (commit order: data first, manifest last, so a torn write re-runs);
+  (commit order: data first, manifest last, so a torn write re-runs;
+  after a failure, units still running finish without a manifest);
 - ``metrics.json`` aggregates per-bucket counts at the end.
 
-The graph table itself is partitioned by predicate local-name —
-vertical partitioning, the classic RDF-store layout: pass-1 style
-scans (rdf:type only) prune to one partition.
+The graph table itself is partitioned by ``pred_part`` (``type`` for
+rdf:type statements, ``data`` for the rest): pass-1 style scans of a
+stored table (rdf:type only) prune to one partition.
 """
 
 from __future__ import annotations
@@ -31,9 +38,12 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+from pyspark.util import inheritable_thread_target
 
 from .. import RDF_TYPE
 from ..crypto import Pseudonymizer
@@ -41,8 +51,8 @@ from ..functions.terms import serialize_triple_line
 from ..operators.extract import (
     TRANSCRIPT_COLS,
     derived_triples,
-    extract_triples,
     per_turn_triples,
+    type_triples,
 )
 from ..operators.index import build_type_index
 from ..rules import Rules
@@ -103,13 +113,29 @@ def _invalid_transcript():
 
 
 def triples_checksum(triples: DataFrame) -> tuple[int, int]:
-    """(row_count, order-insensitive checksum) over canonical lines."""
-    row = (
-        triples.select(F.xxhash64(serialize_triple_line()).alias("h"))
-        .agg(F.count("*").alias("n"), F.bit_xor("h").alias("checksum"))
-        .collect()[0]
-    )
+    """(row_count, order-insensitive checksum) over canonical lines, in
+    one Spark job: an ``Observation`` over a ``noop`` write aggregates
+    inside the scan's tasks, with no shuffle and no final collect."""
+    obs = Observation()
+    triples.select(F.xxhash64(serialize_triple_line()).alias("h")).observe(
+        obs, F.count(F.lit(1)).alias("n"), F.bit_xor("h").alias("checksum")
+    ).write.format("noop").mode("overwrite").save()
+    row = obs.get
     return int(row["n"]), int(row["checksum"] or 0)
+
+
+def _stored(triples: DataFrame, level: int) -> DataFrame:
+    """The physical frame of a graph-table unit: its pred_part column,
+    then (levels 1-2) compaction."""
+    out = triples.withColumn("pred_part", predicate_partition_col())
+    # pred_part is computed BEFORE compaction (level 2 dictionary-codes
+    # the predicate column away); it passes through compact_triples.
+    return compact_triples(out, level=level) if level else out
+
+
+def _as_read(schema: StructType) -> StructType:
+    """``schema`` as a parquet read reports it: every column nullable."""
+    return StructType([StructField(f.name, f.dataType, True, f.metadata) for f in schema])
 
 
 class GraphTableWriter:
@@ -294,73 +320,88 @@ class GraphTableWriter:
             "type_index" if self.version == 1 else f"type_index_v{self.version}",
         )
         index_manifest = os.path.join(self.manifest_dir, "type_index.json")
-        if not os.path.exists(index_manifest):
-            obs = Observation("type_index")
-            index_df = build_type_index(extract_triples(valid))
-            self.fmt.write(index_df.observe(obs, F.count(F.lit(1)).alias("n")), index_path)
-            _atomic_write_json(index_manifest, {
-                "snapshot_id": snapshot_id, "rows": obs.get["n"], "stage": "pass1"
-            })
-        index_df = self.fmt.read(spark, index_path)
-
-        # Malformed rows land in _quarantine/bucket=<k> in ONE write
-        # before any bucket commits (audit trail, SURVEY §4); the bucket
-        # manifests take their counts from quarantine.json.
         quarantine_manifest = os.path.join(self.manifest_dir, "quarantine.json")
-        if not os.path.exists(quarantine_manifest):
-            obs = Observation("quarantine")
-            bad = bucketed.filter(_invalid_transcript()).withColumnRenamed("_bucket", "bucket")
-            bad.observe(
-                obs, *[F.count_if(F.col("bucket") == b).alias(str(b)) for b in range(self.n_buckets)]
-            ).write.mode("overwrite").partitionBy("bucket").json(self.quarantine_dir)
-            _atomic_write_json(quarantine_manifest, {
-                "snapshot_id": snapshot_id, "buckets": obs.get
-            })
-        with open(quarantine_manifest) as fh:
-            quarantined = json.load(fh)["buckets"]
+        # Pass 1 reads only the rdf:type statements: one explode per
+        # row and the index aggregate, one Exchange.
+        index_df = build_type_index(type_triples(valid))
+        pending = [u for u in [*range(self.n_buckets), "derived"] if u not in manifests]
+        # Units are independent Spark jobs; running them side by side
+        # keeps the executors busy between one unit's small jobs. More
+        # concurrent units than cores would only queue tasks.
+        workers = max(1, min(len(pending), spark.sparkContext.defaultParallelism))
+        with ThreadPoolExecutor(workers) as pool:
+            try:
+                # Malformed rows land in _quarantine/bucket=<k> in ONE
+                # write, alongside pass 1 and before any bucket commits
+                # (audit trail, SURVEY §4); the bucket manifests take
+                # their counts from quarantine.json.
+                quarantine = None
+                if not os.path.exists(quarantine_manifest):
+                    quarantine = pool.submit(
+                        inheritable_thread_target(spark)(self._write_quarantine), bucketed
+                    )
+                if not os.path.exists(index_manifest):
+                    obs = Observation()
+                    self.fmt.write(index_df.observe(obs, F.count(F.lit(1)).alias("n")), index_path)
+                    _atomic_write_json(index_manifest, {
+                        "snapshot_id": snapshot_id, "rows": obs.get["n"], "stage": "pass1"
+                    })
+                if quarantine is not None:
+                    _atomic_write_json(quarantine_manifest, {
+                        "snapshot_id": snapshot_id, "buckets": quarantine.result()
+                    })
+                with open(quarantine_manifest) as fh:
+                    quarantined = json.load(fh)["buckets"]
+                index_df = self.fmt.read(spark, index_path, schema=index_df.schema)
 
-        # Per-turn triples are conversation-local -> one bucket each.
-        # The pipeline is built once; each bucket's filter on _bucket
-        # is pushed below the explode and both index joins onto the
-        # scan, so a bucket reads and transforms only its own rows.
-        # Derived triples (entity typing, link scores) are GLOBAL facts
-        # and get their own single commit, so the union over all
-        # commits equals extract_triples(all) exactly regardless of
-        # n_buckets (no cross-bucket duplicate type rows).
-        per_turn = pseudonymize(per_turn_triples(valid), index_df, rules, hasher)
-        units = [
-            (b, per_turn.filter(F.col("_bucket") == b).drop("_bucket"))
-            for b in range(self.n_buckets)
-        ]
-        units.append(("derived", pseudonymize(derived_triples(valid), index_df, rules, hasher)))
-
-        for bucket, out in units:
-            if bucket in manifests:
-                continue
-            out = out.withColumn("pred_part", predicate_partition_col())
-            if level:
-                # pred_part is computed BEFORE compaction (level 2
-                # dictionary-codes the predicate column away); it passes
-                # through compact_triples untouched.
-                out = compact_triples(out, level=level)
-            data_path = os.path.join(self.data_dir, f"bucket={bucket}")
-            self.fmt.write(out, data_path, partition_by=["pred_part"])
-            n, checksum = triples_checksum(
-                maybe_expand(self.fmt.read(spark, data_path).drop("pred_part"))
-            )
-            n_bad = quarantined.get(str(bucket), 0)
-            manifests[bucket] = {
-                "snapshot_id": snapshot_id,
-                "partition_id": bucket,
-                "row_count": n,
-                "checksum": checksum,
-                "quarantined": n_bad,
-                "storage_level": level,
-            }
-            _atomic_write_json(self._manifest_path(bucket), manifests[bucket])
-            metrics["buckets"][str(bucket)] = {
-                "rows": n, "checksum": checksum, "quarantined": n_bad
-            }
+                # Per-turn triples are conversation-local -> one bucket
+                # each. The pipeline is built once; each bucket's filter
+                # on _bucket is pushed below the explode and both index
+                # joins onto the scan, so a bucket reads and transforms
+                # only its own rows. Derived triples (entity typing,
+                # link scores) are GLOBAL facts and get their own single
+                # commit, so the union over all commits equals
+                # extract_triples(all) exactly regardless of n_buckets
+                # (no cross-bucket duplicate type rows).
+                per_turn = pseudonymize(per_turn_triples(valid), index_df, rules, hasher)
+                futures = []
+                for unit in pending:
+                    out = (
+                        pseudonymize(derived_triples(valid), index_df, rules, hasher)
+                        if unit == "derived"
+                        else per_turn.filter(F.col("_bucket") == unit).drop("_bucket")
+                    )
+                    futures.append((unit, pool.submit(
+                        inheritable_thread_target(spark)(self._commit_unit),
+                        spark, _stored(out, level), unit,
+                    )))
+                # Manifests are written here, in unit order, as the
+                # units finish: a unit's manifest follows its data and
+                # every earlier unit's manifest.
+                for fut in as_completed([f for _, f in futures]):
+                    fut.result()  # the first failure raises here
+                    while futures and futures[0][1].done():
+                        bucket, done = futures.pop(0)
+                        n, checksum = done.result()
+                        n_bad = quarantined.get(str(bucket), 0)
+                        manifests[bucket] = {
+                            "snapshot_id": snapshot_id,
+                            "partition_id": bucket,
+                            "row_count": n,
+                            "checksum": checksum,
+                            "quarantined": n_bad,
+                            "storage_level": level,
+                        }
+                        _atomic_write_json(self._manifest_path(bucket), manifests[bucket])
+                        metrics["buckets"][str(bucket)] = {
+                            "rows": n, "checksum": checksum, "quarantined": n_bad
+                        }
+            except BaseException:
+                # Units not yet started are dropped; running ones finish
+                # (the with-block waits for them) but get no manifest,
+                # so a resume re-runs them.
+                pool.shutdown(cancel_futures=True)
+                raise
 
         metrics["total_rows"] = sum(m["row_count"] for m in manifests.values())
         metrics["total_quarantined"] = sum(m.get("quarantined", 0) for m in manifests.values())
@@ -369,12 +410,27 @@ class GraphTableWriter:
         # an idempotent re-run doesn't duplicate the log)
         snaps = self.snapshots()
         if metrics["buckets"] or not any(s["version"] == self.version for s in snaps):
-            sample = self.fmt.read(
-                spark,
-                os.path.join(self.data_dir, f"bucket={self.n_buckets - 1 if self.n_buckets else 0}"),
-            )
-            self._commit_snapshot(snapshot_id, sample.drop("pred_part").schema.json(), manifests)
+            schema = _stored(per_turn.drop("_bucket"), level).drop("pred_part").schema
+            self._commit_snapshot(snapshot_id, _as_read(schema).json(), manifests)
         return metrics
+
+    def _write_quarantine(self, bucketed: DataFrame) -> dict:
+        """Write the malformed rows under _quarantine/bucket=<k>; returns
+        their count per bucket."""
+        obs = Observation()
+        bad = bucketed.filter(_invalid_transcript()).withColumnRenamed("_bucket", "bucket")
+        bad.observe(
+            obs, *[F.count_if(F.col("bucket") == b).alias(str(b)) for b in range(self.n_buckets)]
+        ).write.mode("overwrite").partitionBy("bucket").json(self.quarantine_dir)
+        return obs.get
+
+    def _commit_unit(self, spark: SparkSession, out: DataFrame, unit) -> tuple[int, int]:
+        """Write one unit's data and read it back with the schema it was
+        written with: (row_count, checksum) of what is on disk."""
+        data_path = os.path.join(self.data_dir, f"bucket={unit}")
+        self.fmt.write(out, data_path, partition_by=["pred_part"])
+        back = self.fmt.read(spark, data_path, schema=out.schema)
+        return triples_checksum(maybe_expand(back.drop("pred_part")))
 
     def read(self, spark: SparkSession, as_of: str | None = None) -> DataFrame:
         """Logical triple frame of the latest snapshot, or time-travel
@@ -415,8 +471,10 @@ class GraphTableWriter:
         # all buckets of one snapshot share a version data dir; an
         # empty-bucket snapshot reaches read_union's descriptive error
         base = os.path.dirname(paths[0]) if paths else self.data_dir
+        # the recorded schema also reads buckets that hold no rows
+        schema = StructType.fromJson(json.loads(snap["schema"]))
         return maybe_expand(
-            self.fmt.read_union(spark, paths, base).drop("pred_part", "bucket")
+            self.fmt.read_union(spark, paths, base, schema=schema).drop("pred_part", "bucket")
         )
 
 

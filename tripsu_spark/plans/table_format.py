@@ -22,6 +22,7 @@ import os
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class TableFormat(ABC):
@@ -36,12 +37,20 @@ class TableFormat(ABC):
         """Commit ``df`` at ``path``, replacing prior contents."""
 
     @abstractmethod
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
-        """Read one committed table/bucket back."""
+    def read(self, spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
+        """Read one committed table/bucket back. ``schema``, when the
+        caller knows it (the frame it wrote), spares a format that
+        infers schemas from files the inference, and lets it read a
+        table of zero rows; a catalog format, which stores the schema,
+        ignores it."""
 
     @abstractmethod
-    def read_union(self, spark: SparkSession, paths: list[str], base_path: str) -> DataFrame:
-        """Read several sibling bucket paths as one frame."""
+    def read_union(
+        self, spark: SparkSession, paths: list[str], base_path: str,
+        schema: StructType | None = None,
+    ) -> DataFrame:
+        """Read several sibling bucket paths as one frame (``schema``
+        as for ``read``)."""
 
 
 class ParquetFormat(TableFormat):
@@ -53,13 +62,23 @@ class ParquetFormat(TableFormat):
             w = w.partitionBy(*partition_by)
         w.parquet(path)
 
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
-        return spark.read.parquet(path)
+    def read(self, spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
+        return _reader(spark, schema).parquet(path)
 
-    def read_union(self, spark: SparkSession, paths: list[str], base_path: str) -> DataFrame:
+    def read_union(
+        self, spark: SparkSession, paths: list[str], base_path: str,
+        schema: StructType | None = None,
+    ) -> DataFrame:
         _require_paths(paths, base_path)
         # basePath makes Spark treat the bucket=<k> roots as partition dirs
-        return spark.read.option("basePath", base_path).parquet(*paths)
+        return _reader(spark, schema).option("basePath", base_path).parquet(*paths)
+
+
+def _reader(spark: SparkSession, schema: StructType | None):
+    """A zero-row partitioned write leaves no part file, so only a
+    given schema reads it back; partition columns missing from
+    ``schema`` are still discovered from the directory names."""
+    return spark.read if schema is None else spark.read.schema(schema)
 
 
 #: spark-submit flags that make IcebergFormat runnable on a real
@@ -141,11 +160,14 @@ class IcebergFormat(TableFormat):
             w = w.partitionedBy(*partition_by)
         w.createOrReplace()
 
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
+    def read(self, spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
         self._require_runtime(spark)
         return spark.read.table(self.table_identifier(path))
 
-    def read_union(self, spark: SparkSession, paths: list[str], base_path: str) -> DataFrame:
+    def read_union(
+        self, spark: SparkSession, paths: list[str], base_path: str,
+        schema: StructType | None = None,
+    ) -> DataFrame:
         self._require_runtime(spark)
         _require_paths(paths, base_path)
         out = None

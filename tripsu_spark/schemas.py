@@ -11,7 +11,6 @@ lang both NULL (rdf_types.rs:49-69); values are uninterpreted strings.
 
 from pyspark.sql.types import (
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -53,15 +52,5 @@ INDEX_SCHEMA = StructType(
     [
         StructField("subject_key", StringType(), False),
         StructField("types", StringType(), False),  # conceptual; real col is array<string>
-    ]
-)
-
-# Lineage manifest row (north_rule: per-partition lineage + metrics).
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField("snapshot_id", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("row_count", LongType(), False),
-        StructField("checksum", StringType(), False),
     ]
 )

@@ -44,6 +44,13 @@ DEFAULTS = {
     # bytes/parallelism >> 64k, so the floor never produces small
     # shuffle partitions or small files on real inputs.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    # PySpark's DataFrame debugging captures the Python call site of
+    # every functions.*/Column call and ships it to the JVM: 2-3 extra
+    # py4j round trips per call (pyspark/errors/utils.py::_with_origin),
+    # which made building the writer's pass-2 plans 5,387 round trips
+    # instead of 2,237. The cost of turning it off: analysis errors no
+    # longer name the Python line that built the failing expression.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 # v2 commits rename task output during (parallel) task commit instead
