@@ -336,6 +336,86 @@ def test_quarantine_survives_crash_and_resume(spark, setup, crash_after):
             assert json.load(fh)["quarantined"] == one_shot["buckets"][b]["quarantined"]
 
 
+def _committed_state(writer):
+    """Every manifest file of a table (by name), and its version-1 snapshots."""
+    manifests = {}
+    for name in sorted(os.listdir(writer.manifest_dir)):
+        with open(os.path.join(writer.manifest_dir, name)) as fh:
+            manifests[name] = json.load(fh)
+    return manifests, [s for s in writer.snapshots() if s["version"] == 1]
+
+
+@pytest.fixture(scope="module")
+def dirty_one_shot(spark, tmp_path_factory):
+    """A one-shot run over the dirty fixture at 3 buckets: its metrics
+    and committed state."""
+    transcripts = synthetic_transcripts(spark, n_convs=24, turns_per_conv=4)
+    writer = GraphTableWriter(str(tmp_path_factory.mktemp("one-shot") / "graph"), n_buckets=3)
+    metrics = writer.run(
+        spark, _dirty(spark, transcripts), default_rules(),
+        Pseudonymizer.create("sha256", BENCH_SECRET), snapshot_id="snap-c",
+    )
+    return metrics, _committed_state(writer)
+
+
+# A run's writes, in commit order. The failure is injected right after
+# each one lands: the data or JSON file is on disk and the run dies.
+WRITE_POINTS = [
+    "index data", "type_index.json", "quarantine data", "quarantine.json",
+    "bucket=1 data", "bucket-1.json", "metrics.json", "snapshot",
+]
+
+
+@pytest.mark.parametrize("point", WRITE_POINTS)
+def test_resume_after_a_failure_at_each_write_point(spark, setup, monkeypatch, point,
+                                                    dirty_one_shot):
+    """Whichever write the run dies after, the resume leaves the
+    manifests, totals and snapshot of a one-shot run, and one snapshot."""
+    transcripts, rules, hasher, path = setup
+    dirty = _dirty(spark, transcripts)
+    fired = []
+
+    def after(what):
+        if what == point and not fired:
+            fired.append(what)
+            raise RuntimeError(f"injected failure after {what}")
+
+    class FailingFormat(ParquetFormat):
+        def write(self, df, p, partition_by=None):
+            super().write(df, p, partition_by)
+            after("index data" if "type_index" in p else f"{os.path.basename(p)} data")
+
+    write_json = lineage._atomic_write_json
+
+    def json_then_fail(p, obj):
+        write_json(p, obj)
+        in_snapshots = os.path.basename(os.path.dirname(p)) == "_snapshots"
+        after("snapshot" if in_snapshots else os.path.basename(p))
+
+    write_quarantine = GraphTableWriter._write_quarantine
+
+    def quarantine_then_fail(self, bucketed):
+        counts = write_quarantine(self, bucketed)
+        after("quarantine data")
+        return counts
+
+    monkeypatch.setattr(lineage, "_atomic_write_json", json_then_fail)
+    monkeypatch.setattr(GraphTableWriter, "_write_quarantine", quarantine_then_fail)
+    writer = GraphTableWriter(path, n_buckets=3, table_format=FailingFormat())
+    with pytest.raises(RuntimeError, match="injected failure"):
+        writer.run(spark, dirty, rules, hasher, snapshot_id="snap-c")
+    assert fired == [point]
+    resumed = writer.run(spark, dirty, rules, hasher, snapshot_id="snap-c")
+
+    once, (manifests, snapshots) = dirty_one_shot
+    assert resumed["total_rows"] == once["total_rows"]
+    assert resumed["total_quarantined"] == once["total_quarantined"] == 3
+    got_manifests, got_snapshots = _committed_state(writer)
+    assert got_manifests == manifests
+    assert len(got_snapshots) == 1
+    assert got_snapshots[0]["buckets"] == snapshots[0]["buckets"]
+
+
 def test_snapshot_time_travel_and_schema_evolution(spark, setup):
     """Iceberg-style snapshot log: a second run with overwrite=True
     commits a NEW snapshot (here also changing the PHYSICAL schema to

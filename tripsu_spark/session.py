@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULTS = {
@@ -82,13 +83,20 @@ SUBMIT_EXCLUDED = ("spark.driver.memory", "spark.ui.enabled")
 
 
 def get_submit_spark(app_name: str) -> SparkSession:
-    """Session for spark-submit entry points (jobs/*.py): engine
-    defaults applied, master and driver resources left to the
-    launcher. Single source of truth — job scripts must not re-apply
-    DEFAULTS by hand."""
+    """Session for spark-submit entry points (jobs/*.py): master and
+    driver resources left to the launcher, and each engine default
+    applied only where the launcher (``--conf``, ``--properties-file``)
+    set no value of its own. Single source of truth — job scripts must
+    not re-apply DEFAULTS by hand."""
+    # The launcher's settings reach the gateway JVM as system
+    # properties, which SparkConf() reads; a key set on the builder
+    # would override them. Static keys cannot be set once the context
+    # exists, so this check runs before the builder does.
+    SparkContext._ensure_initialized()
+    launcher = SparkConf()
     builder = SparkSession.builder.appName(app_name)
     for k, v in DEFAULTS.items():
-        if k not in SUBMIT_EXCLUDED:
+        if k not in SUBMIT_EXCLUDED and not launcher.contains(k):
             builder = builder.config(k, v)
     return builder.getOrCreate()
 
