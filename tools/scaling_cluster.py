@@ -1,16 +1,14 @@
-"""N vs 4N executors on the production job: ``jobs/run_pipeline.py``,
-unchanged, under ``spark-submit --master local-cluster[E,1,M] --py-files
-tripsu_spark.zip`` at E = 1 and 4, runs interleaved with alternating
-order. Job span (first job start to last job end) and task time come
-from Spark's event log; every run's per-bucket checksums must equal a
-local-mode ``GraphTableWriter.run`` over the same input and secret.
+"""N vs 4N executors on the production job: the unchanged
+``jobs/run_pipeline.py`` under ``spark-submit --master local-cluster[E,1,M]
+--py-files tripsu_spark.zip`` at E = 1 and 4, runs interleaved with
+alternating order. Job span and task time come from Spark's event log;
+every run's per-bucket checksums must equal a local-mode
+``GraphTableWriter.run`` over the same input and ``BENCH_SECRET``.
 
-    python tools/scaling_cluster.py <sf0.1>/events.parquet [--runs 3]
+    python tools/scaling_cluster.py <sf>/events.parquet  # -> BENCH_SCALING_cluster_<sf>.json
 """
 
-from __future__ import annotations
-
-import argparse
+import contextlib
 import json
 import os
 import shutil
@@ -23,10 +21,19 @@ import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
+
+from tripsu_spark.crypto import Pseudonymizer  # noqa: E402
+from tripsu_spark.plans.lineage import GraphTableWriter  # noqa: E402
+from tripsu_spark.plans.oracle import BENCH_SECRET  # noqa: E402
+from tripsu_spark.plans.pipeline import default_rules  # noqa: E402
+from tripsu_spark.session import get_spark  # noqa: E402
+from tripsu_spark.sources.transcripts import transcripts_from_events  # noqa: E402
+
 EXECUTORS = (1, 4)
 EXECUTOR_MB = 2048
 BUCKETS = 16
-SECRET = b"scaling-cluster-fixed-secret-0123456789"
+RUNS = 3
 
 
 def spark_home(work: Path) -> Path:
@@ -61,10 +68,8 @@ def submit(work: Path, args: list[str], timeout: float = 600) -> tuple[str, floa
     try:
         out, err = proc.communicate(timeout=timeout)
     finally:
-        try:
+        with contextlib.suppress(ProcessLookupError):
             os.killpg(proc.pid, signal.SIGKILL)
-        except ProcessLookupError:
-            pass
         proc.wait()
     if proc.returncode != 0:
         raise RuntimeError(f"spark-submit exited {proc.returncode}:\n{err[-4000:]}")
@@ -118,47 +123,39 @@ def run_job(work: Path, zipped: Path, transcripts: Path, executors: int, tag: st
     }
 
 
-def measure(work: Path, events: str, n_runs: int) -> dict:
-    from tripsu_spark.crypto import Pseudonymizer
-    from tripsu_spark.plans.lineage import GraphTableWriter
-    from tripsu_spark.plans.pipeline import default_rules
-    from tripsu_spark.session import get_spark
-    from tripsu_spark.sources.transcripts import transcripts_from_events
-
-    (work / "secret.bin").write_bytes(SECRET)
+def measure(work: Path, events: str) -> dict:
+    (work / "secret.bin").write_bytes(BENCH_SECRET)
     transcripts = work / "transcripts"
     spark = get_spark(master="local[4]", shuffle_partitions=8)
     transcripts_from_events(spark.read.parquet(events)).write.parquet(str(transcripts))
     local = GraphTableWriter(str(work / "graph-local"), n_buckets=BUCKETS).run(
         spark, spark.read.parquet(str(transcripts)), default_rules(),
-        Pseudonymizer.create("sha256", SECRET),
+        Pseudonymizer.create("sha256", BENCH_SECRET),
     )
     spark.stop()
     want = {b: m["checksum"] for b, m in local["buckets"].items()}
 
     zipped, runs = package(work), []
-    for i in range(n_runs):
+    for i in range(RUNS):
         for e in EXECUTORS if i % 2 == 0 else EXECUTORS[::-1]:
             runs.append(run_job(work, zipped, transcripts, e, f"r{i}-e{e}"))
             print(json.dumps({k: v for k, v in runs[-1].items() if k != "checksums"}), flush=True)
     differ = sum(r["checksums"] != want for r in runs)
     if differ:
         raise SystemExit(f"{differ} of {len(runs)} runs differ from the local-mode checksums")
-    config = {"master": f"local-cluster[E,1,{EXECUTOR_MB}]", "buckets": BUCKETS,
-              "input": events, "cpus": os.cpu_count()}
+    config = {"master": f"local-cluster[E,1,{EXECUTOR_MB}]", "buckets": BUCKETS, "input": events,
+              "secret": "tripsu_spark.plans.oracle.BENCH_SECRET", "cpus": os.cpu_count()}
     return {"config": config, "runs": runs, **summarize(runs)}
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("events", help="events.parquet the transcripts are built from")
-    ap.add_argument("--runs", type=int, default=3, help="runs per executor count")
-    ap.add_argument("--out", default=str(ROOT / "BENCH_SCALING_cluster_sf0.1.json"))
-    args = ap.parse_args()
-    sys.path.insert(0, str(ROOT))
+    if len(sys.argv) != 2:
+        raise SystemExit(__doc__)
+    events = sys.argv[1]
     with tempfile.TemporaryDirectory(prefix="scaling-cluster-") as tmp:
-        result = measure(Path(tmp), args.events, args.runs)
-    Path(args.out).write_text(json.dumps(result, indent=1) + "\n")
+        result = measure(Path(tmp), events)
+    out = ROOT / f"BENCH_SCALING_cluster_{Path(events).resolve().parent.name}.json"
+    out.write_text(json.dumps(result, indent=1) + "\n")
     print(json.dumps({k: result[k] for k in ("points", "efficiency")}))
 
 
